@@ -55,16 +55,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores
+    val spark = Session.create("graft-bench", cpus)
 
     // headline corpus: 8x lineitem rows (4.8M docs at sf0.1), 128 files —
     // long enough runs that fixed overhead does not dominate the timing
@@ -82,11 +74,10 @@ object Bench {
     // post): this host's throughput swings 4-7x with memory weather, so the
     // artifact carries its own normalizer — validate_docs_per_ghash is the
     // weather-cancelled headline to compare across rounds
-    val nCores = cpus.toInt
-    val ctlPre = phase("control_pre") { tools.Control.hashRate(spark, nCores) }
+    val ctlPre = phase("control_pre") { tools.Control.hashRate(spark, cpus) }
     phase("warmup_validate") { timeValidate(spark, dir) }
     val (valSec, _) = phase("timed_validate") { timeValidate(spark, dir) }
-    val ctlPost = phase("control_post") { tools.Control.hashRate(spark, nCores) }
+    val ctlPost = phase("control_post") { tools.Control.hashRate(spark, cpus) }
     val docsPerSec = nDocs / valSec
     // geometric mean of the bracketing controls: min() systematically
     // inflated the normalized headline when one control window degraded

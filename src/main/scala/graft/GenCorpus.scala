@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gen.Synth
 
 /** Write the deterministic synthetic interleaved corpus to parquet:
@@ -14,14 +12,7 @@ object GenCorpus {
     val outDir = args(0)
     val n = args(1).toLong
     val parts = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("graft-gen")
     Synth.corpus(spark, n, Some(parts)).write.mode("overwrite").parquet(outDir)
     println(s"""{"dir":"$outDir","docs":$n,"files":$parts}""")
     spark.stop()

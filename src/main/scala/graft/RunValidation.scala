@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.checks.ValidationJob
 
 /** spark-submit entry point for the resumable validation job:
@@ -18,15 +16,7 @@ object RunValidation {
     val Array(inputDir, outDir, runId) = args.take(3)
     val batches = if (args.length > 3) args(3).toInt else 8
     val maxBatches = if (args.length > 4) args(4).toInt else Int.MaxValue
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-validate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("graft-validate")
     val s = ValidationJob.run(spark, inputDir, outDir, runId,
       batches = batches, maxBatches = maxBatches)
     println(s"""{"run_id":"${s.runId}","snapshot_id":"${s.snapshotId}",""" +

@@ -3,7 +3,7 @@ package graft.checks
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Exact discrete percentiles of a numeric column, computed distributively.
@@ -40,7 +40,7 @@ object ExactQuantile {
   def percentiles(df: DataFrame, value: Column, percents: Seq[Int]): DataFrame =
     percentilesWithCuts(df, value, percents, Nil)
 
-  /** [[percentiles]] plus, per cut value q (long-typed `value` columns),
+  /** [[percentiles]] plus, per cut value q (integral `value` columns only),
     * the exact number of rows <= q (`le_<i>`) and < q (`lt_<i>`) — the
     * inputs of a quantile-sketch rank audit. The cut counts ride the SAME
     * final aggregation pass as the percentile extraction, so auditing a
@@ -53,6 +53,10 @@ object ExactQuantile {
       s"percents must be in [1, 100]: $percents")
     val spark = df.sparkSession
     val valueType = df.select(value.as("v")).schema.head.dataType
+    // cuts are longs: against a fractional column the comparison would
+    // silently coerce, so only integral value columns accept cuts
+    require(cuts.isEmpty || Seq(ByteType, ShortType, IntegerType, LongType).contains(valueType),
+      s"cuts need an integral value column, got $valueType")
     val schema = StructType(
       StructField("n_rows", LongType, nullable = false) +:
         (percents.map(p => StructField(s"exact_p$p", valueType, nullable = true)) ++

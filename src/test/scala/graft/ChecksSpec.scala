@@ -109,14 +109,16 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the skew ceiling now rests on Catalyst's PARTIAL hash aggregate (the
     // explicit groupBy(key, partition_id) salt stage was removed in r6 as a
     // redundant second exchange), so pin the guarantee ON dupKeys' OWN
-    // executed plan: a partial_count must sit below the exchange — at most
-    // one hot-key row per input partition enters the shuffle
+    // executed plan: a Partial-mode count must sit below the exchange — at
+    // most one hot-key row per input partition enters the shuffle
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
     val executed = Uniqueness.dupKeys(data, col("k"))
     executed.collect()
     val nodes = org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(executed)
     val partialAggs = nodes.collect {
       case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec
-          if h.toString.contains("partial_count") => h
+          if h.aggregateExpressions.exists(e =>
+            e.mode == Partial && e.aggregateFunction.isInstanceOf[Count]) => h
     }
     assert(partialAggs.nonEmpty,
       s"dupKeys lost its map-side partial aggregation:\n${nodes.mkString("\n")}")
@@ -247,6 +249,18 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val empty = ExactQuantile.percentiles(
       Seq.empty[java.lang.Long].toDF("v"), col("v"), Seq(50)).collect().head
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
+  }
+
+  test("ExactQuantile rejects cuts on a non-integral value column") {
+    import graft.checks.ExactQuantile
+    val df = Seq(0.5, 1.5, 2.5).toDF("v")
+    // long cuts against a double column would coerce silently
+    val e = intercept[IllegalArgumentException] {
+      ExactQuantile.percentilesWithCuts(df, col("v"), Seq(50), Seq(1L))
+    }
+    assert(e.getMessage.contains("integral"), e.getMessage)
+    // without cuts a double column is fine
+    assert(ExactQuantile.percentiles(df, col("v"), Seq(50)).collect().head.getDouble(1) == 1.5)
   }
 
   test("kind frequencies over the synthetic corpus") {

@@ -134,6 +134,42 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(diff == 0)
   }
 
+  test("hyperplaneBands plane-table kernel matches the in-loop weight derivation") {
+    // the kernel reads plane weights from a precomputed table instead of
+    // deriving 2 Mix64 calls per multiply-add; band keys feed LSH buckets
+    // (and persisted indexes), so it must reproduce the in-loop derivation
+    // bit for bit. The select runs through whole-stage codegen (repartition
+    // keeps the optimizer from folding it into the local relation).
+    import graft.expr.{Mix64, SketchExprs}
+    def weight(plane: Int, d: Int): Double =
+      Mix64.mix(Mix64.mix(plane.toLong) ^ Mix64.mix(d.toLong)).toDouble / 9.223372036854776e18
+    def inLoopBands(vec: Seq[Double], bands: Int, rows: Int): Seq[Long] =
+      (0 until bands).map { b =>
+        val key = (0 until rows).foldLeft(0L) { (key, r) =>
+          val dot = vec.indices.foldLeft(0.0)((dot, d) => dot + vec(d) * weight(b * rows + r, d))
+          (key << 1) | (if (dot >= 0) 1L else 0L)
+        }
+        Mix64.mix(Mix64.mix(b.toLong) ^ key)
+      }
+    def check(bands: Int, rows: Int, dims: Int, asFloat: Boolean): Unit = {
+      val vecs = (0 until 8).map(i => (0 until dims).map(d =>
+        Mix64.mix(i.toLong * 65537 + d).toDouble / 9.2e18))
+      // the kernel widens float elements to double before the dot product
+      val ref = if (asFloat) vecs.map(_.map(_.toFloat.toDouble)) else vecs
+      val df =
+        if (asFloat) vecs.zipWithIndex.map { case (v, i) => (i, v.map(_.toFloat)) }.toDF("i", "v")
+        else vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "v")
+      val got = df.repartition(2)
+        .select($"i", SketchExprs.hyperplaneBands($"v", bands, rows, dims))
+        .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+      vecs.indices.foreach { i =>
+        assert(got(i) == inLoopBands(ref(i), bands, rows), s"vector $i at ${bands}x${rows}x$dims")
+      }
+    }
+    check(bands = 16, rows = 16, dims = 64, asFloat = true)
+    check(bands = 8, rows = 62, dims = 33, asFloat = false)
+  }
+
   test("capPerGroup keeps the k smallest ids per group, partition-independently") {
     import graft.ops.Sampling
     val rows = (0L until 50L).map(i => (s"g${i % 3}", i))

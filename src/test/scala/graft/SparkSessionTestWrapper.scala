@@ -2,15 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared factory session for the whole test JVM (Test / fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.create("graft-test")
 }
 
 trait SparkSessionTestWrapper {
