@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.expr.SketchExprs._
 
 /** Deduplication suite for training-data pipelines: exact, MinHash+LSH,
-  * SimHash, and n-gram Jaccard. All candidate generation is bucket-local
-  * (band join), so the pair space never goes quadratic in corpus size —
-  * the 100 TB shape is: shuffle compact keys by band, generate candidates
-  * from capped buckets, verify exactly. AQE's skew-join handling splits
-  * oversized band buckets at runtime.
+  * SimHash, n-gram Jaccard and embedding LSH. Every near-dup operator has
+  * one shape: derive bucket keys per row, collect each bucket's sorted
+  * members into one row ([[members]]), expand i<j candidate pairs with the
+  * one streamed primitive ([[pairsOf]]), then verify exactly. Candidate
+  * generation is bucket-local (band join), so the pair space never goes
+  * quadratic in corpus size — the 100 TB shape is: shuffle compact keys
+  * by band, generate candidates from capped buckets, verify exactly.
   */
 object Dedup {
 
@@ -85,28 +87,121 @@ object Dedup {
     when(size(array_union(a, b)) === 0, lit(1.0))
       .otherwise(size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
 
-  /** Intra-row i<j expansion of a sorted bucket-member array into candidate
-    * structs (the shared shape of every LSH bucket expansion here), with an
-    * optional intra-row `keep` predicate applied BEFORE the flatten so
-    * filtered candidates never materialize. All pair operators share this
-    * one definition; their contract assumes UNIQUE ids — a duplicated input
-    * id would expand to (x, x) self-pairs, which callers must drop.
+  /** Sorted members per bucket key as the one array column `ms` that
+    * [[pairsOf]] expands, keeping the first `cap` (the deterministic LSH
+    * bucket cap; the default keeps every member).
     */
-  private def expandPairs(ms: Column, mk: (Column, Column) => Column,
-      keep: Column => Column = _ => lit(true)): Column =
-    explode(flatten(transform(sequence(lit(0), size(ms) - 2), i =>
-      filter(
-        transform(sequence(i + 1, size(ms) - 1), j =>
-          mk(element_at(ms, i + 1), element_at(ms, j + 1))),
-        keep))))
+  private def members(rows: DataFrame, keys: Seq[String], member: Column,
+      cap: Int = Int.MaxValue): DataFrame = {
+    val ms = sort_array(collect_list(member))
+    rows.groupBy(keys.map(col): _*)
+      .agg((if (cap < Int.MaxValue) slice(ms, 1, cap) else ms).as("ms"))
+  }
+
+  /** The one i<j pair expansion of the dedup family: for every row whose
+    * sorted member array `ms` holds two or more members, one row (x, y)
+    * per member pair, x before y in `ms`. Two chained built-in generators
+    * emit the pairs, so each caller's pair constructor and keep predicate
+    * are ordinary Project and Filter columns over the generated rows.
+    *
+    * Contract: a bucket's member list is collected into ONE row —
+    * O(members), as in [[members]] — and only the quadratic pair list is
+    * generated, row by row, never as one array. A group large enough to
+    * strain one row (tens of millions of members) would emit ~10^15 pairs,
+    * so the pair count is the binding limit, not the member array.
+    * Whole-stage codegen hands a group's pairs on before it reads the next
+    * group, so a consumer that buffers rows instead of aggregating them (a
+    * write, a collect) holds one group's pairs at once: a 16 k-member
+    * simhash group (1.3e8 pairs) exhausts a 4 GB heap that way. Ids are
+    * assumed unique: a duplicated id yields (x, x) self-pairs, which every
+    * caller drops.
+    */
+  private def pairsOf(groups: DataFrame): DataFrame =
+    groups.where(size(col("ms")) > 1)
+      .select(posexplode(col("ms")).as(Seq("i", "x")), col("ms"))
+      .select(col("x"),
+        explode(slice(col("ms"), col("i") + 2, size(col("ms")) - col("i") - 1)).as("y"))
+
+  /** Exact verification tail shared by [[minhashPairs]],
+    * [[ngramJaccardPairs]] and [[embeddingCosinePairs]]: candidate (a, b)
+    * rows lose their self-pairs and are deduped across buckets (one
+    * shuffle of thin id pairs), then ONE scan of the per-row `value` table
+    * is joined to both pair sides (the small side broadcasts) and `score`
+    * runs once per surviving pair. Values are computed per ROW, not per
+    * candidate side — a doc appearing in many candidates must not pay its
+    * shingling once per pair (an A/B with post-join shingling measured 2x
+    * slower on dedup_ngram_pairs). A duplicated id makes its pairs
+    * ambiguous at the fetch; the two-sides filter drops them.
+    *
+    * @param table (id, `value`)
+    * @return (a, b, `scoreName`) with score >= minScore
+    */
+  private def verifyPairs(candidates: DataFrame, table: DataFrame, value: String,
+      score: (Column, Column) => Column, scoreName: String,
+      minScore: Double): DataFrame =
+    candidates.where(col("a") =!= col("b")).distinct()
+      .select(struct(col("a"), col("b")).as("p"),
+        explode(array(col("a"), col("b"))).as("id"))
+      .join(table, Seq("id"))
+      .groupBy(col("p"))
+      .agg(min_by(col(value), col("id")).as("va"), max_by(col(value), col("id")).as("vb"),
+        count(lit(1)).as("nsides"))
+      .where(col("nsides") === 2)
+      .select(col("p.a").as("a"), col("p.b").as("b"),
+        score(col("va"), col("vb")).as(scoreName))
+      .where(col(scoreName) >= minScore)
+
+  /** Band-bucket occupancy: per-bucket member counts of at least
+    * `minSize`, descending. */
+  private def bucketStats(bandRows: DataFrame, minSize: Long): DataFrame =
+    bandRows.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
+      .where(col("n") >= minSize)
+      .orderBy(col("n").desc)
+
+  /** MinHash band rows, shared by [[minhashPairs]] and its
+    * [[minhashBucketStats]] audit: (id, sh) per non-null-text row, and
+    * (id, sige, band, bh) per band.
+    *
+    * Null text is EXCLUDED (no content to compare) — without this, null
+    * tokens shingle to [""] and every null-text doc pairs with every other
+    * at jaccard 1.0 (the simhashPairs null-pooling hazard, same fix).
+    *
+    * Band keys come from ONE fused kernel (MinhashBandKeys), value-identical
+    * to xxhash64(band, sig-slice) per band (parity-pinned in OpsSpec): a
+    * transform lambda over the bands would re-evaluate the minhash once per
+    * band, and a literal per-band SQL array compiles one inlined hasher per
+    * band on every session's first minhash query.
+    *
+    * The signature copy riding the band fan-out exists ONLY for the
+    * estimate prefilter, so it is truncated to 7 bits per component
+    * (array<tinyint>, ~6x fewer bytes than the full array<bigint> — the full
+    * sig was ~16 KB per doc across 32 bands, the dominant shuffle volume of
+    * the whole operator). Truncation is output-preserving: equal 64-bit
+    * components are equal truncated, so the estimated match count only
+    * GROWS — the prefilter admits a (negligibly) wider candidate superset
+    * and the exact-Jaccard verify decides membership exactly as before.
+    * (7 bits: ANSI-safe tinyint range; false equality 2^-7 per component
+    * inflates the estimate by ~0.5 of 64 components.)
+    */
+  private def minhashBands(df: DataFrame, id: Column, text: Column, numHashes: Int,
+      bands: Int): (DataFrame, DataFrame) = {
+    val rows = numHashes / bands
+    require(rows * bands == numHashes, "bands must divide numHashes")
+    val withSh = df.where(text.isNotNull).select(id.as("id"), shingles(text).as("sh"))
+    val bandRows = withSh.select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
+      .select(col("id"),
+        transform(col("sig"), h => h.bitwiseAND(lit(127L)).cast("tinyint")).as("sige"),
+        posexplode(minhashBandKeys(col("sig"), bands, rows)).as(Seq("band", "bh")))
+    (withSh, bandRows)
+  }
 
   /** MinHash + LSH near-dup pairs: shingle -> k-min-hash signature -> band
     * buckets -> capped intra-bucket candidate pairs (signature-estimate
     * prefilter) -> exact-Jaccard verification over ONE extra scan.
     *
     * Scale shape: the band shuffle carries only (band, bucket-hash, id,
-    * signature) — the shingle arrays never ride the x`bands` fan-out (they
-    * did in v1: a measured x32 shuffle-volume multiplier). Buckets are
+    * signature) — the shingle arrays never ride the x`bands` fan-out, which
+    * would multiply their shuffle volume by `bands`. Buckets are
     * capped at `maxBucket` members (deterministic by id order) so one
     * degenerate mega-bucket — mass-duplicated boilerplate, a real 100 TB
     * phenomenon — cannot go quadratic; use [[minhashBucketStats]] to audit
@@ -121,109 +216,32 @@ object Dedup {
   def minhashPairs(df: DataFrame, id: Column, text: Column, threshold: Double = 0.8,
       numHashes: Int = 64, bands: Int = 32, maxBucket: Int = 256,
       estMargin: Double = 0.2, inputPartitions: Int = 0): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
     // Small single-split inputs (one parquet row group) pin the signature
     // stage — the CPU-heavy part — to one task; callers pass inputPartitions
     // to fan it out. At real scale the scan has thousands of splits and the
     // knob stays 0 (no extra shuffle).
     val in = if (inputPartitions > 0) df.repartition(inputPartitions) else df
-    // null text is EXCLUDED (no content to compare) — without this, null
-    // tokens shingle to [""] and every null-text doc pairs with every other
-    // at jaccard 1.0 (the simhashPairs null-pooling hazard, same fix)
-    val withSh = in.where(text.isNotNull)
-      .select(id.as("id"), shingles(text).as("sh"))
-    val withSig = withSh.select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
-    // Band keys are ONE fused kernel (MinhashBandKeys) producing the same
-    // xxhash64(band, sig-slice) values as the literal-indexed SQL array it
-    // replaces (parity-pinned in OpsSpec). History of this expression:
-    // a transform/sequence lambda with sig inside re-evaluated the minhash
-    // per band element (176s vs 23s, 2026-08-16); the literal 32-slice
-    // array fixed that but janino-compiled ~32 inlined hashers on every
-    // session's first minhash query.
-    //
-    // The signature copy riding the band fan-out exists ONLY for the
-    // estimate prefilter, so it is truncated to 7 bits per component
-    // (array<tinyint>, ~6x fewer bytes than the full array<bigint> — the
-    // full sig was ~16 KB per doc across 32 bands, the dominant shuffle
-    // volume of the whole operator). Truncation is output-preserving:
-    // equal 64-bit components are equal truncated, so the estimated match
-    // count only GROWS — the prefilter admits a (negligibly) wider
-    // candidate superset and the exact-Jaccard verify decides membership
-    // exactly as before. (7 bits: ANSI-safe tinyint range; false equality
-    // 2^-7 per component inflates the estimate by ~0.5 of 64 components.)
-    val bandRows = withSig.select(col("id"),
-      transform(col("sig"), h => h.bitwiseAND(lit(127L)).cast("tinyint")).as("sige"),
-      posexplode(minhashBandKeys(col("sig"), bands, rows))
-        .as(Seq("band", "bh")))
-    // ONE candidate shuffle: aggregate bucket members per (band, bucket),
-    // deterministically capped, then expand i<j pairs intra-row
-    val buckets = bandRows
-      .groupBy(col("band"), col("bh"))
-      .agg(slice(sort_array(collect_list(struct(col("id"), col("sige")))),
-        1, maxBucket).as("ms"))
-      .where(size(col("ms")) > 1)
-    val estMatches = lit((math.ceil((threshold - estMargin) * numHashes)).toInt)
-    val candidates = buckets.select(expandPairs(col("ms"), (a, b) => {
-        val matches = size(filter(
-          zip_with(a.getField("sige"), b.getField("sige"),
-            (x, y) => x === y), m => m))
-        struct(
-          least(a.getField("id"), b.getField("id")).as("a"),
-          greatest(a.getField("id"), b.getField("id")).as("b"),
-          matches.as("m"))
-      },
-      p => p.getField("m") >= estMatches).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
-      .groupBy(col("a"), col("b")).agg(lit(1)) // dedupe across bands
-      .select(struct(col("a"), col("b")).as("p"))
-    verifyPairs(candidates, withSh, threshold)
+    val (withSh, bandRows) = minhashBands(in, id, text, numHashes, bands)
+    // ONE candidate shuffle: members per (band, bucket), sorted by id and
+    // capped; a pair survives the estimate prefilter as it streams
+    val estMatches = lit(math.ceil((threshold - estMargin) * numHashes).toInt)
+    val candidates = pairsOf(members(bandRows, Seq("band", "bh"),
+        struct(col("id"), col("sige")), maxBucket))
+      .where(size(filter(zip_with(col("x.sige"), col("y.sige"), _ === _), m => m)) >=
+        estMatches)
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+    verifyPairs(candidates, withSh, "sh", jaccard, "jaccard", threshold)
   }
 
-  /** Exact-Jaccard verification tail shared by [[minhashPairs]] and
-    * [[ngramJaccardPairs]]: ONE scan of the per-doc shingle table, joined
-    * to both pair sides (the small side broadcasts), exact jaccard once
-    * per surviving pair. Shingles are computed per DOCUMENT, not per
-    * candidate side — a doc appearing in many candidates must not pay the
-    * shingle computation once per pair (an A/B with post-join shingling
-    * measured 2x slower on dedup_ngram_pairs for exactly that reason).
-    *
-    * @param candidates one column `p` = struct(a, b)
-    * @param withSh     (id, sh) distinct-shingle table
-    * @return (a, b, jaccard) with exact jaccard >= threshold
-    */
-  private def verifyPairs(candidates: DataFrame, withSh: DataFrame,
-      threshold: Double): DataFrame = {
-    val sides = candidates
-      .select(col("p"), explode(array(col("p.a"), col("p.b"))).as("id"))
-    sides.join(withSh, Seq("id"))
-      .groupBy(col("p"))
-      .agg(min_by(col("sh"), col("id")).as("sha"), max_by(col("sh"), col("id")).as("shb"),
-        count(lit(1)).as("nsides"))
-      .where(col("nsides") === 2)
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        jaccard(col("sha"), col("shb")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** Band-bucket occupancy audit for [[minhashPairs]]: per-bucket member
-    * counts above `minSize`, descending — run before choosing `maxBucket`
-    * on a new corpus (a capped bucket trades recall inside mass-duplicated
+  /** Band-bucket occupancy audit for [[minhashPairs]], over the same band
+    * rows (null-text docs excluded): per-bucket member counts of at least
+    * `minSize`, descending — run before choosing `maxBucket` on a new
+    * corpus (a capped bucket trades recall inside mass-duplicated
     * boilerplate clusters for a quadratic-explosion guarantee).
     */
   def minhashBucketStats(df: DataFrame, id: Column, text: Column,
-      numHashes: Int = 64, bands: Int = 32, minSize: Long = 2): DataFrame = {
-    val rows = numHashes / bands
-    val withSig = df.select(id.as("id"), shingles(text).as("sh"))
-      .select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
-    withSig.select(col("id"),
-      posexplode(minhashBandKeys(col("sig"), bands, rows))
-        .as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
-      .where(col("n") >= minSize)
-      .orderBy(col("n").desc)
-  }
+      numHashes: Int = 64, bands: Int = 32, minSize: Long = 2): DataFrame =
+    bucketStats(minhashBands(df, id, text, numHashes, bands)._2, minSize)
 
   /** n-gram Jaccard near-dup pairs without LSH: EXACT, via prefix filtering
     * (the AllPairs/PPJoin principle, Bayardo et al. WWW'07 / Xiao et al.
@@ -242,23 +260,16 @@ object Dedup {
     * combined aggregate + join back — NOT a count window over the shingle
     * partition, which would concentrate a hot shingle's every occurrence
     * in one task with no AQE skew splitting) -> per-doc rank window
-    * (shuffle by id) -> HYBRID candidate expansion routed by prefix-group
-    * size: groups of <= maxFlatGroup members are grouped per shingle and
-    * expanded i<j INTRA-ROW with the size + positional filters applied
-    * before the flatten (the [[expandPairs]] bucket shape — the common
-    * case, replacing a prefix-index SELF-JOIN that shuffled and
-    * recomputed the whole upstream pipeline once per side: measured
-    * 9.8s -> ~2s at sf0.1 together with the shingle bindOnce fix), while
-    * larger groups (mass-duplicated boilerplate) stream through the
-    * self-join so the quadratic pair set is never materialized in one
-    * array — exactness forbids a cap, and both routes apply identical
-    * filters -> one shingle fetch per surviving candidate side -> exact
-    * Jaccard verify.
+    * (shuffle by id) -> prefix members grouped per shingle and expanded by
+    * [[pairsOf]] with both filters on the streamed pairs -> one shingle
+    * fetch per surviving candidate side -> exact Jaccard verify.
+    * Exactness forbids a cap, so a mass-duplicated prefix group emits its
+    * full quadratic candidate list, streamed.
     */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
-      threshold: Double = 0.8, n: Int = 3, maxFlatGroup: Int = 256): DataFrame = {
+      threshold: Double = 0.8, n: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // null text excluded — see minhashPairs
+    // null text excluded — see minhashBands
     val withSh = df.where(text.isNotNull).select(id.as("id"), shingles(text, n).as("sh"))
     // explode_OUTER, deliberately: `sh` is provably non-null and non-empty
     // here (text is filtered non-null and rawShingles always yields >= 1
@@ -279,65 +290,22 @@ object Dedup {
       // shorten the prefix below the exactness bound (a pair at exactly the
       // threshold could then be missed for unlucky thresholds)
       .where(col("rn") <= col("len") - ceil(lit(threshold) * col("len") - lit(1e-9)) + 1)
-      .select(col("shingle"), col("id"), col("len"), col("rn"))
-    // group prefix members per shingle (one exchange on the shingle) and
-    // expand i<j candidate pairs intra-row; members sort by id so a < b for
-    // free. The AllPairs size filter (jaccard >= t forces t*|A| <= |B| and
-    // t*|B| <= |A|; exactness-preserving, epsilons only LOOSEN) and the
-    // PPJoin positional filter (a match at global-order prefix positions
-    // (rn, rnb) bounds the reachable overlap by 1 + min(remaining), which
-    // must reach ceil(t/(1+t)*(|A|+|B|)); a qualifying pair's FIRST shared
-    // shingle always passes, and one surviving row per pair is all the
-    // dedup groupBy needs) are applied BEFORE the flatten so pruned
-    // candidates never materialize.
-    val reqOverlap: (Column, Column) => Column = (la, lb) =>
-      ceil(lit(threshold / (1 + threshold)) * (la + lb) - lit(1e-9))
-    val sizeAndPosFilter: (Column, Column, Column, Column) => Column =
-      (la, ra, lb, rb) =>
-        lb >= lit(threshold) * la - lit(1e-9) &&
-          lit(threshold) * lb <= la + lit(1e-9) &&
-          lit(1) + least(la - ra, lb - rb) >= reqOverlap(la, lb)
-    // HYBRID expansion routed by prefix-group size (a map-side-combined
-    // count — huge groups are never collected into one row): groups up to
-    // `maxFlatGroup` members expand i<j INTRA-ROW (filters applied before
-    // the flatten, so pruned candidates never materialize — the common
-    // case, and what replaced the old always-self-join: measured 9.8s ->
-    // ~2s at sf0.1 with the bindOnce fix); LARGER groups — mass-duplicated
-    // boilerplate, where every copy shares every prefix shingle — stream
-    // through the self-join instead, because a flatten materializes the
-    // group's FULL quadratic candidate set in one array (70k copies of one
-    // doc = 2.4e9 structs in a single row, over the JVM array limit; the
-    // join emits the same pairs as spillable streamed rows). Both routes
-    // apply identical filters; exactness is route-independent.
-    val psize = prefix.groupBy(col("shingle")).agg(count(lit(1)).as("gn"))
-    val routed = prefix.join(psize.where(col("gn") > 1), Seq("shingle"))
-    val smallPairs = routed.where(col("gn") <= maxFlatGroup)
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(struct(col("id"), col("len"), col("rn")))).as("ms"))
-      .select(expandPairs(col("ms"), (x, y) =>
-        struct(x.getField("id").as("a"), y.getField("id").as("b"),
-          sizeAndPosFilter(x.getField("len"), x.getField("rn"),
-            y.getField("len"), y.getField("rn")).as("keep")),
-        p => p.getField("keep")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-    val big = routed.where(col("gn") > maxFlatGroup)
-      .select(col("shingle"), col("id"), col("len"), col("rn"))
-    val bigPairs = big
-      .join(big.select(col("shingle"), col("id").as("b"),
-          col("len").as("lenb"), col("rn").as("rnb")),
-        Seq("shingle"))
-      .where(col("id") < col("b"))
-      .where(sizeAndPosFilter(col("len"), col("rn"), col("lenb"), col("rnb")))
-      .select(col("id").as("a"), col("b"))
-    val candidates = smallPairs.unionByName(bigPairs)
-      .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
-      .groupBy(col("a"), col("b")).agg(lit(1))
-      .select(struct(col("a"), col("b")).as("p"))
-    // exact verify: ONE scan of the shingle table joined to both pair
-    // sides (see [[verifyPairs]] — shingling per DOC, not per candidate
-    // side: an A/B of shingling after the join measured 2x slower here
-    // because a doc pays once per candidate it appears in)
-    verifyPairs(candidates, withSh, threshold)
+    // members sort by id, so a < b for free. The AllPairs size filter
+    // (jaccard >= t forces t*|A| <= |B| and t*|B| <= |A|; exactness-
+    // preserving, epsilons only LOOSEN) and the PPJoin positional filter
+    // (a match at global-order prefix positions (ra, rb) bounds the
+    // reachable overlap by 1 + min(remaining), which must reach
+    // ceil(t/(1+t)*(|A|+|B|)); a qualifying pair's FIRST shared shingle
+    // always passes, and one surviving row per pair is all the dedup needs)
+    val (la, ra, lb, rb) = (col("x.len"), col("x.rn"), col("y.len"), col("y.rn"))
+    val reqOverlap = ceil(lit(threshold / (1 + threshold)) * (la + lb) - lit(1e-9))
+    val candidates = pairsOf(members(prefix, Seq("shingle"),
+        struct(col("id"), col("len"), col("rn"))))
+      .where(lb >= lit(threshold) * la - lit(1e-9) &&
+        lit(threshold) * lb <= la + lit(1e-9) &&
+        lit(1) + least(la - ra, lb - rb) >= reqOverlap)
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+    verifyPairs(candidates, withSh, "sh", jaccard, "jaccard", threshold)
   }
 
   /** SimHash near-dup pairs: 64-bit signature, bucketed with the
@@ -351,19 +319,18 @@ object Dedup {
     *
     * Scale: table-key width is 64*cleanBlocks/(maxHamming+cleanBlocks) bits.
     * The default cleanBlocks=2 gives ~25-bit keys at maxHamming=3 (3.3e7
-    * buckets — sub-quadratic at 10^12 docs, vs the 16-bit / 65k-bucket
-    * single-chunk scheme this replaces). For large radii (>= 6) the key
+    * buckets — sub-quadratic at 10^12 docs). For large radii (>= 6) the key
     * shrinks below ~16 bits and MinHash is the better tool.
     *
     * Identical signatures are collapsed BEFORE any join (one row per
     * distinct sig), so identical-boilerplate mass cannot blow up the
-    * candidate join, and residual distinct-sig buckets are capped at
-    * `maxBucket` ([[simhashSigPairs]]). The emitted PAIR LIST is still
-    * quadratic inside a true duplicate group — that is the contract;
-    * feed [[dupClusters]] when clusters, not pairs, are the goal. The
-    * quadratic list STREAMS (r6): over-`maxBucket` groups pair via a
-    * self-join and cross products via chained explodes, never as one
-    * materialized array per row.
+    * candidate join; `maxBucket` caps only the distinct-sig buckets
+    * ([[simhashSigPairs]]). The emitted PAIR LIST is still quadratic inside
+    * a true duplicate group — that is the contract; feed [[dupClusters]]
+    * when clusters, not pairs, are the goal. Neither the hamming-0 pairs
+    * ([[pairsOf]] over each signature group) nor the cross products
+    * (chained explodes) are ever one array; see [[pairsOf]] for what one
+    * huge group costs a consumer that does not aggregate.
     */
   def simhashPairs(df: DataFrame, id: Column, text: Column,
       maxHamming: Int = 3, cleanBlocks: Int = 2, maxBucket: Int = 256,
@@ -382,39 +349,19 @@ object Dedup {
     // contributes ONE row per distinct signature to the table joins, so the
     // candidate join can never go quadratic in the duplicate count. The
     // hamming-0 pairs inside each group come for free from the collapse.
-    val sigGroups = withSig.groupBy(col("sig"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-    // hamming-0 pairs, HYBRID-routed like ngramJaccardPairs' expansion:
-    // the pair list inside a true duplicate group is quadratic BY CONTRACT,
-    // but it must stream, never materialize as one array — expandPairs'
-    // flatten on a 70k-copy boilerplate group would allocate C(70k,2)
-    // structs in a single row (over the JVM array limit). Small groups
-    // keep the intra-row expansion; larger ones self-join their exploded
-    // members on the signature (spillable streamed rows, same pairs).
-    val zeroSmall = sigGroups
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(expandPairs(col("ids"), (a, b) =>
-        struct(a.as("a"), b.as("b"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"), lit(0).as("hamming"))
-    val zeroBigM = sigGroups.where(size(col("ids")) > maxBucket)
-      .select(col("sig"), explode(col("ids")).as("m"))
-    val zeroBig = zeroBigM
-      .join(zeroBigM.select(col("sig"), col("m").as("mb")), Seq("sig"))
-      .where(col("m") < col("mb"))
-      .select(col("m").as("a"), col("mb").as("b"), lit(0).as("hamming"))
-    val zeroPairs = zeroSmall.unionByName(zeroBig)
+    val sigGroups = members(withSig, Seq("sig"), col("id"))
+    val zeroPairs = pairsOf(sigGroups)
+      .select(col("x").as("a"), col("y").as("b"), lit(0).as("hamming"))
       .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
     // cross-signature candidates over DISTINCT sigs only, capped buckets
     val sigPairs = simhashSigPairs(sigGroups.select(col("sig")),
       maxHamming, cleanBlocks, maxBucket)
-    // id-product expansion via CHAINED explodes — Generate streams one
-    // element at a time, where the previous flatten(transform x transform)
-    // materialized the whole |idsa| x |idsb| product as one array per
-    // matched signature pair (two mass-dup groups within hamming range
-    // would allocate their full cross product in a single row)
+    // id-product expansion via CHAINED explodes: Generate emits one row per
+    // element, so two mass-dup groups within hamming range never allocate
+    // their full cross product as one array
     val crossPairs = sigPairs
-      .join(sigGroups.select(col("sig").as("siga"), col("ids").as("idsa")), Seq("siga"))
-      .join(sigGroups.select(col("sig").as("sigb"), col("ids").as("idsb")), Seq("sigb"))
+      .join(sigGroups.select(col("sig").as("siga"), col("ms").as("idsa")), Seq("siga"))
+      .join(sigGroups.select(col("sig").as("sigb"), col("ms").as("idsb")), Seq("sigb"))
       .select(col("hamming"), explode(col("idsa")).as("ia"), col("idsb"))
       .select(col("hamming"), col("ia"), explode(col("idsb")).as("ib"))
       .select(least(col("ia"), col("ib")).as("a"),
@@ -428,9 +375,9 @@ object Dedup {
     * over a DISTINCT-signature table, bucket members aggregated per table
     * key and capped at `maxBucket` (deterministic by signature order — the
     * [[minhashPairs]] cap, same audit tradeoff), i<j expansion with the
-    * hamming filter applied intra-row, then deduped across tables. Exposed
-    * `private[graft]` so the mass-duplicate test can assert the candidate
-    * volume stays sub-quadratic.
+    * hamming filter on the streamed pairs, then deduped across tables.
+    * Exposed `private[graft]` so the mass-duplicate test can assert the
+    * candidate volume stays sub-quadratic.
     *
     * @param sigs one column `sig` (distinct 64-bit signatures)
     * @return (siga, sigb, hamming) with 1 <= hamming <= maxHamming
@@ -448,16 +395,12 @@ object Dedup {
       posexplode(array(tables.zipWithIndex.map { case (blocks, t) =>
         xxhash64(lit(t) +: blocks.map(b => blockVal(col("sig"), b)): _*)
       }: _*)).as(Seq("table", "tk")))
-    val buckets = keyed.groupBy(col("table"), col("tk"))
-      .agg(slice(sort_array(collect_list(col("sig"))), 1, maxBucket).as("sigs"))
-      .where(size(col("sigs")) > 1)
-    buckets.select(expandPairs(col("sigs"), (sa, sb) =>
-        struct(sa.as("siga"), sb.as("sigb"),
-          bit_count(sa.bitwiseXOR(sb)).as("hamming")),
-        p => p.getField("hamming") <= maxHamming).as("p"))
-      .select(col("p.siga").as("siga"), col("p.sigb").as("sigb"),
-        col("p.hamming").as("hamming"))
-      .groupBy(col("siga"), col("sigb")).agg(min(col("hamming")).as("hamming"))
+    // hamming is a function of the pair, so a distinct dedupes across tables
+    pairsOf(members(keyed, Seq("table", "tk"), col("sig"), maxBucket))
+      .select(col("x").as("siga"), col("y").as("sigb"),
+        bit_count(col("x").bitwiseXOR(col("y"))).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** Benchmark decontamination screening: per-doc count of distinct word
@@ -672,78 +615,57 @@ object Dedup {
     labels.select(col("id"), col("label").as("cluster"))
   }
 
+  /** Hyperplane-LSH band rows, shared by [[embeddingCosinePairs]] and its
+    * [[embeddingBucketStats]] audit: (id, v) per row, and (id, band, bh) per
+    * band — no vector column in the band exchange (asserted by a plan test
+    * in OpsSpec).
+    */
+  private def embeddingBands(df: DataFrame, id: Column, vec: Column, bands: Int,
+      rowsPerBand: Int, dims: Int): (DataFrame, DataFrame) = {
+    val withVec = df.select(id.as("id"), vec.as("v"))
+    (withVec, withVec.select(col("id"),
+      posexplode(Similarity.bandKeys(col("v"), bands, rowsPerBand, dims))
+        .as(Seq("band", "bh"))))
+  }
+
   /** Embedding near-dup pairs: random-hyperplane LSH (deterministic in-plan
     * hash-derived planes, any dimensionality — see [[Similarity.bandKeys]])
     * -> capped band buckets -> exact cosine verification, mirroring the
     * [[minhashPairs]] scale shape exactly:
     *
     *   - the band shuffle carries only (band, bucket-hash, id) — the vector
-    *     never rides the x`bands` fan-out (an earlier formulation shuffled
-    *     the full embedding per band and recomputed cosine once per band
-    *     collision);
+    *     never rides the x`bands` fan-out;
     *   - buckets are capped at `maxBucket` members (deterministic by id
     *     order) so mass-near-identical embeddings — clone farms, all-zero
     *     rows — cannot go quadratic; audit with [[embeddingBucketStats]];
-    *   - candidate pairs are deduped across bands BEFORE any vector work,
-    *     then both vectors are fetched with ONE extra scan + one
-    *     candidate-sized shuffle and cosine is computed once per pair.
+    *   - candidate pairs stream out of [[pairsOf]] and are deduped across
+    *     bands BEFORE any vector work, then both vectors are fetched with
+    *     ONE extra scan + one candidate-sized shuffle and cosine is computed
+    *     once per pair ([[verifyPairs]]).
     *
     * Default banding (16 bands x 16 bits) keeps 65k buckets per band —
     * sized for ~0.95-cosine recall ~0.95 while staying sub-quadratic at
-    * corpus scale (the previous 4x4-bit default had 16 buckets per band:
-    * quadratic at any real size).
+    * corpus scale.
     */
   def embeddingCosinePairs(df: DataFrame, id: Column, vec: Column,
       minCosine: Double = 0.95, bands: Int = 16, rowsPerBand: Int = 16,
       dims: Int = 64, maxBucket: Int = 256, inputPartitions: Int = 0): DataFrame = {
     val in = if (inputPartitions > 0) df.repartition(inputPartitions) else df
-    val withVec = in.select(id.as("id"), vec.as("v"))
-    // band rows: (band, bh, id) only — no vector column in this exchange
-    // (asserted by a plan test in OpsSpec)
-    val bandRows = withVec.select(col("id"),
-      posexplode(Similarity.bandKeys(col("v"), bands, rowsPerBand, dims))
-        .as(Seq("band", "bh")))
-    val buckets = bandRows.groupBy(col("band"), col("bh"))
-      .agg(slice(sort_array(collect_list(col("id"))), 1, maxBucket).as("ids"))
-      .where(size(col("ids")) > 1)
-    // intra-bucket i<j expansion (ids sorted, so a < b for free), deduped
-    // across bands before any vector is touched. Requires unique ids: a
-    // duplicated id expands to self-pairs (dropped) and makes its genuine
-    // pairs ambiguous at the vector fetch (nsides filter drops those too).
-    val candidates = buckets.select(expandPairs(col("ids"), (a, b) =>
-        struct(a.as("a"), b.as("b"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .where(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(lit(1))
-      .select(struct(col("a"), col("b")).as("p"))
-    // exact verify: ONE scan of the vector table joined to both pair sides,
-    // cosine computed once per surviving pair
-    val sides = candidates
-      .select(col("p"), explode(array(col("p.a"), col("p.b"))).as("id"))
-    sides.join(withVec, Seq("id"))
-      .groupBy(col("p"))
-      .agg(min_by(col("v"), col("id")).as("va"), max_by(col("v"), col("id")).as("vb"),
-        count(lit(1)).as("nsides"))
-      .where(col("nsides") === 2)
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        cosineSim(col("va"), col("vb")).as("cosine"))
-      .where(col("cosine") >= minCosine)
+    val (withVec, bandRows) = embeddingBands(in, id, vec, bands, rowsPerBand, dims)
+    val candidates = pairsOf(members(bandRows, Seq("band", "bh"), col("id"), maxBucket))
+      .select(col("x").as("a"), col("y").as("b"))
+    verifyPairs(candidates, withVec, "v", cosineSim, "cosine", minCosine)
   }
 
   /** Band-bucket occupancy audit for [[embeddingCosinePairs]] (the
-    * [[minhashBucketStats]] analog): per-bucket member counts above
-    * `minSize`, descending — run before choosing `maxBucket` on a new
-    * embedding corpus.
+    * [[minhashBucketStats]] analog), over the same band rows: per-bucket
+    * member counts of at least `minSize`, descending — run before choosing
+    * `maxBucket` on a new embedding corpus.
     */
   def embeddingBucketStats(df: DataFrame, id: Column, vec: Column,
       bands: Int = 16, rowsPerBand: Int = 16, dims: Int = 64,
       minSize: Long = 2): DataFrame =
-    df.select(id.as("id"),
-        posexplode(Similarity.bandKeys(vec, bands, rowsPerBand, dims))
-          .as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
-      .where(col("n") >= minSize)
-      .orderBy(col("n").desc)
+    bucketStats(embeddingBands(df, id, vec, bands, rowsPerBand, dims)._2, minSize)
 
   /** Intra-document line dedup: drop repeated lines WITHIN each document,
     * keeping the first occurrence — the per-page counterpart of the global

@@ -159,11 +159,16 @@ object Ivf {
     * partition — skew splitting applies to rebalance origins only), so a
     * hot cluster would serialize the write into one giant task/file;
     * AQE both merges sliver partitions and splits oversized ones under
-    * the rebalance origin.
+    * the rebalance origin. The hint is a no-op without AQE, so an AQE-off
+    * session is refused rather than silently writing the sliver layout.
     */
-  def writeIndex(index: DataFrame, dir: String): Unit =
+  def writeIndex(index: DataFrame, dir: String): Unit = {
+    require(index.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean,
+      "Ivf.writeIndex needs spark.sql.adaptive.enabled=true: its rebalance " +
+        "hint is a no-op without AQE")
     index.hint("rebalance", col("cluster"))
       .write.mode("overwrite").partitionBy("cluster").parquet(dir)
+  }
 
   /** Read a partitioned index written by [[writeIndex]]. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =

@@ -177,4 +177,17 @@ class IvfSpec extends AnyFunSuite with SparkSessionTestWrapper {
       s"scan read $numFilesRead files; probed cluster has $probedFiles " +
         s"of ${files.size} total — pruning did not happen")
   }
+
+  test("ivf: writeIndex refuses an AQE-off session (its rebalance hint needs AQE)") {
+    val model = Ivf.Model.axis(4, 16)
+    val dir = Files.createTempDirectory("graft-ivf-noaqe").resolve("index").toString
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Ivf.writeIndex(Ivf.assign(clustered, $"vec_id", $"embedding", model), dir))
+      assert(e.getMessage.contains("spark.sql.adaptive.enabled"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert(!Files.exists(java.nio.file.Paths.get(dir)), "nothing may be written")
+  }
 }

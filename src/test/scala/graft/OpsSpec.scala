@@ -449,32 +449,57 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(expected.subsetOf(pairs))
   }
 
-  test("ngramJaccardPairs hybrid routes agree; mass-dup groups stream via the join") {
-    // the r6 hybrid sends prefix-groups over maxFlatGroup through the
-    // streamed self-join instead of the intra-row flatten (a group's full
-    // quadratic candidate set must never materialize in one array);
-    // exactness must be route-independent
-    val sample = docs.where($"text".isNotNull && $"doc_id" < 200)
-    def pairsOf(mfg: Int) = Dedup.ngramJaccardPairs(sample, $"doc_id", $"text",
-        threshold = 0.7, maxFlatGroup = mfg)
-      .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaFlatten = pairsOf(1000000)
-    val viaJoin = pairsOf(1) // every group of >= 2 takes the join route
-    assert(viaFlatten == viaJoin)
-    assert(viaFlatten.nonEmpty) // the comparison must actually exercise pairs
+  test("ngramJaccardPairs streams a mass-dup farm's full pair list") {
     // mass-duplicate farm: 300 identical docs -> every prefix group has 300
-    // members (> default 256), so the join route carries them; all pairs
-    // must still surface
+    // members; exactness forbids a cap, so all C(300, 2) pairs must surface
+    // (streamed out of the pair expansion, never one array per group)
     val farm = spark.range(300).select($"id",
       lit("alpha beta gamma delta epsilon zeta eta theta iota kappa").as("t"))
     val n = Dedup.ngramJaccardPairs(farm, $"id", $"t").count()
     assert(n == 300L * 299 / 2)
   }
 
-  test("simhash hamming-0 routes agree; an over-maxBucket dup farm streams via the join") {
-    // same hybrid contract as the ngram expansion: identical results on
-    // both routes, and a duplicate group larger than maxBucket must go
-    // through the streamed self-join (never one intra-row flatten)
+  test("ngramJaccardPairs plan: one rank window and no per-route upstream recompute") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // AQE off: the static plan, where every recomputed upstream shows up as
+    // its own scan and rank window
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan = try Dedup.ngramJaccardPairs(docs, $"doc_id", $"text")
+      .queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val windows = plan.collect { case w: WindowExec => w }
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(windows.size == 1, s"${windows.size} rank windows:\n$plan")
+    assert(scans.size <= 3, s"${scans.size} parquet scans:\n$plan")
+  }
+
+  test("shingles bind the tokenizing split once per row (bindOnce guard)") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    // a range source, not a local Seq: ConvertToLocalRelation would fold a
+    // local relation and leave no expressions to count
+    val text = spark.range(4)
+      .select(concat(lit("w x y z "), $"id".cast("string")).as("text"))
+    def splits(c: org.apache.spark.sql.Column) = {
+      val q = text.select(c.as("sh"))
+      assert(q.collect().length == 4)
+      q.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case s: StringSplit => s })).size
+    }
+    assert(splits(Dedup.shingles($"text")) == 1)
+    // the counter sees into lambdas: the hand-inlined form re-splits per use
+    val t = Dedup.tokens($"text")
+    val inlined = when(size(t) >= 3, transform(sequence(lit(0), size(t) - 3),
+        i => concat_ws(" ", slice(t, i + 1, lit(3)))))
+      .otherwise(array(concat_ws(" ", t)))
+    assert(splits(inlined) > 1)
+  }
+
+  test("simhash hamming-0 pairs ignore maxBucket; an over-maxBucket dup farm streams in full") {
+    // a duplicate group larger than maxBucket still emits its full pair
+    // list (streamed, never one intra-row array): maxBucket caps only the
+    // distinct-signature buckets
     val farm = spark.range(600).select($"id",
       lit("alpha beta gamma delta epsilon zeta eta theta").as("t"))
       .unionByName(spark.range(600, 610).select($"id",
@@ -488,10 +513,9 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val farmPairs = pairs.filter { case (a, b) => a < 600 && b < 600 }
     assert(farmPairs.size == 600 * 599 / 2) // full quadratic list, streamed
     assert(farmPairs.forall { case (a, b) => a < b })
-    // hamming-0 route parity on a mixed corpus: maxBucket=1 forces every
-    // dup group through the join route (hamming-0 only — maxBucket also
-    // caps the cross-signature buckets, which is a different, documented
-    // recall trade)
+    // hamming-0 parity on a mixed corpus: maxBucket=1 must not drop any
+    // hamming-0 pair (hamming-0 only — maxBucket does cap the
+    // cross-signature buckets, a different, documented recall trade)
     val mixed = spark.range(40).select($"id",
       concat(lit("shared boilerplate text block"),
         when($"id" % 4 === 0, lit("")).otherwise(concat(lit(" v"), $"id"))).as("t"))
@@ -666,6 +690,9 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(Dedup.simhashPairs(withNulls, $"doc_id", $"text").count() == 0)
     assert(Dedup.minhashPairs(withNulls, $"doc_id", $"text").count() == 0)
     assert(Dedup.ngramJaccardPairs(withNulls, $"doc_id", $"text").count() == 0)
+    // the bucket audit reads the same band rows: null-text docs are not
+    // pooled into buckets there either
+    assert(Dedup.minhashBucketStats(withNulls, $"doc_id", $"text", minSize = 2).count() == 0)
     // duplicate id (same row ingested twice): self-pairs (x, x) must not
     // appear in any pair operator's output
     val dup = Seq((7L, "the quick brown fox jumps over the lazy dog"))
