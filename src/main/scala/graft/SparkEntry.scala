@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.agg.StatsAgg
@@ -8,13 +9,28 @@ import graft.checks.{Drift, Referential, RowValidator, Uniqueness}
 import graft.gen.{Fixtures, Synth}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every `queries` key has a matching `oracleSql` entry (DuckDB-runnable over
-  * the same parquet tables) unless the operator is not SQL-expressible, in
-  * which case the driver records a rows-only check.
+/** Driver contract (SURVEY.md §7): the flagship `entry` plus the query
+  * [[SparkEntry.registry]]. Each registry entry pairs a query's Spark body
+  * with its mandatory DuckDB oracle SQL over the same parquet tables; the
+  * oracle aliases columns exactly like the Spark result (the compare sorts
+  * columns by name before hashing).
   */
 object SparkEntry {
+
+  /** One driver query: `run(spark, sfDir)` and the SQL whose rows it must match. */
+  final case class Query(name: String, run: (SparkSession, String) => DataFrame, oracle: String)
+
+  object Query {
+    /** A registry with trimmed oracles; a repeated name is rejected rather
+      * than silently shadowing the earlier entry.
+      */
+    def registry(entries: Query*): Seq[Query] = {
+      val names = entries.map(_.name)
+      val dups = names.diff(names.distinct).distinct
+      require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+      entries.map(q => q.copy(oracle = q.oracle.trim))
+    }
+  }
 
   /** Flagship: full MARC validation pass over a deterministic synthetic
     * interleaved corpus + the two golden fixture docs. Driver smoke-checks
@@ -27,13 +43,144 @@ object SparkEntry {
     RowValidator.verdicts(docs)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
+
+  // ---- Spark-side setup shared by several queries (rebuilt on every call) ----
+
+  /** The Synth MARC corpus keyed by the driver's documents.doc_id. */
+  private def synthCorpus(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Synth.corpusFromIds(s.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id".cast("long")).as[java.lang.Long]).toDF()
+  }
+
+  /** The synthetic media catalog keyed by documents.doc_id. */
+  private def mediaCatalog(s: SparkSession, dir: String): Dataset[ops.Multimodal.Asset] = {
+    import s.implicits._
+    ops.Multimodal.syntheticCatalog(s.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id").as[java.lang.Long])
+  }
+
+  /** MinHash+LSH near-dup pairs verified at Jaccard >= 0.8. Testdata
+    * documents are one parquet row group, so the CPU-heavy signature stage
+    * fans out to the session's cores (no-op shape at scale).
+    */
+  private def nearPairs(docs: DataFrame): DataFrame =
+    Dedup.minhashPairs(docs, col("doc_id"), col("text"), threshold = 0.8,
+        inputPartitions = docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col("a"), col("b"))
+
+  /** The vec_id = 0 embedding: the single-query ANN probe vector. */
+  private def probeVec(emb: DataFrame): Seq[Float] =
+    emb.where(col("vec_id") === 0).select(col("embedding")).collect().head.getSeq[Float](0)
+
+  /** A top-k (id, cosine) result as (rank, vec_id), ranked cosine DESC then id. */
+  private def ranked(top: DataFrame): DataFrame =
+    top.withColumn("rank", row_number().over(Window.orderBy(col("cosine").desc, col("id"))).cast("long"))
+      .select(col("rank"), col("id").as("vec_id"))
+
+  // ---- oracle SQL fragments, one copy each ----
+
+  private def sqlStr(v: String): String = s"'${v.replace("'", "''")}'"
+
+  /** The reference's expected violations on the invalid fixture
+    * (tests/test_models.py:120-152) whose rule id passes `keep`, as VALUES.
+    */
+  private def fixtureOracle(keep: String => Boolean): String = {
+    val rows = Fixtures.expectedInvalid.filter(r => keep(r._1)).map { case (rid, loc, msg) =>
+      s"('1234567890', ${sqlStr(rid)}, ${sqlStr(loc)}, ${sqlStr(msg)})"
+    }
+    s"SELECT * FROM (VALUES ${rows.mkString(", ")}) AS t(doc_id, rule_id, loc_path, msg)"
+  }
+
+  /** FNV-1a 64 of a string expression as UBIGINT (modular HUGEINT multiply
+    * keeps 64-bit wraparound). ascii() is the UTF-8 byte because the
+    * documents corpus is ASCII (verified: zero non-ASCII rows).
+    */
+  private def fnv(e: String): String =
+    s"""list_reduce(list_prepend(14695981039346656037::UBIGINT,
+       |    list_transform(generate_series(1, length($e)), i -> ascii(substr($e, i, 1))::UBIGINT)),
+       |  (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)""".stripMargin
+
+  /** An unsigned 64-bit HUGEINT read as Spark's two's-complement long. */
+  private def signed(u: String): String =
+    s"(CASE WHEN $u >= 9223372036854775808::HUGEINT THEN $u - 18446744073709551616::HUGEINT ELSE $u END)"
+
+  /** Spark's `pmod(hash, m)` over an unsigned 64-bit HUGEINT hash. */
+  private def signedPmod(u: String, m: Long): String = s"(${signed(u)} % $m + $m) % $m"
+
+  /** `t.toks`: lower-cased whitespace tokens per doc. */
+  private val Tokens = """t AS (
+      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents)"""
+
+  /** `shq.sh`: each doc's distinct 3-token shingles (the whole text when
+    * shorter), the set the Jaccard dedup operators compare.
+    */
+  private val Shingles3 = s"""$Tokens, shq AS (
+      SELECT doc_id,
+        list_distinct(CASE WHEN len(toks) >= 3
+          THEN list_transform(generate_series(1, len(toks) - 2),
+               i -> array_to_string(list_slice(toks, i, i + 2), ' '))
+          ELSE [array_to_string(toks, ' ')] END) AS sh
+      FROM t)"""
+
+  /** `pairs`: doc pairs (a < b) sharing a shingle, kept at exact Jaccard >= 0.8. */
+  private val VerifiedPairs = s"""$Shingles3, inv AS (
+      SELECT doc_id, unnest(sh) AS g FROM shq
+    ), cand AS (
+      SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
+      WHERE l.doc_id < r.doc_id GROUP BY 1, 2
+    ), pairs AS (
+      SELECT a, b FROM cand
+      JOIN shq sa ON sa.doc_id = cand.a
+      JOIN shq sb ON sb.doc_id = cand.b
+      WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
+            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8)"""
+
+  /** `clusters(id, cluster)`: recursive-CTE reachability over `pairs`, each
+    * id labelled with its component's minimum id (needs WITH RECURSIVE).
+    */
+  private val Clusters = s"""$VerifiedPairs, edges AS (
+      SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
+    ), cc AS (
+      SELECT DISTINCT x AS id, x AS label FROM edges
+      UNION
+      SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
+    ), clusters AS (
+      SELECT id, min(label) AS cluster FROM cc GROUP BY id)"""
+
+  /** Brute-force cosine top-10 to the vec_id = 0 embedding. */
+  private val AnnTopOracle = """
+      WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
+           scored AS (
+        SELECT vec_id, list_cosine_similarity(e.embedding, q.embedding) AS sim
+        FROM embeddings e, q WHERE vec_id <> 0)
+      SELECT row_number() OVER (ORDER BY sim DESC, vec_id) AS rank, vec_id
+      FROM scored ORDER BY sim DESC, vec_id LIMIT 10
+    """
+
+  /** Per-query brute-force cosine top-10 for every 100th embedding. */
+  private val AnnBatchOracle = """
+      WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
+           scored AS (
+        SELECT q.qid, e.vec_id, list_cosine_similarity(e.embedding, q.qe) AS sim
+        FROM embeddings e, q)
+      SELECT qid, rank, vec_id FROM (
+        SELECT qid, vec_id,
+               row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
+        FROM scored)
+      WHERE rank <= 10
+    """
+
+  /** Every driver query, each with its oracle. */
+  val registry: Seq[Query] = Query.registry(
     // MARC binary source: encode the golden fixtures to ISO 2709 bytes,
     // read them back through the distributed MarcSource scan, validate —
     // must reproduce the same 9-violation oracle (the reference's pymarc
     // entry path, README.md:24-28).
-    "marc_decode" -> ((s, _) => {
+    Query("marc_decode", (s, _) => {
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-mrc")
       java.nio.file.Files.write(dir.resolve("fixtures.mrc"),
@@ -43,11 +190,11 @@ object SparkEntry {
         .select($"doc_id", $"spans")
       RowValidator.violations(docs)
         .select($"doc_id", $"rule_id", array_join($"loc", "/").as("loc_path"), $"msg")
-    }),
+    }, fixtureOracle(_ => true)),
     // Three-scope override surface: a context-scope rule override (006
     // length rule dropped) flips exactly one fixture violation off while
     // record-level checks stay armed (reference validators.py:27-72).
-    "marc_override_flip" -> ((s, _) => {
+    Query("marc_override_flip", (s, _) => {
       import s.implicits._
       val ctx = graft.rules.RuleSet.default.withOverrides(Map("006" -> Some(
         graft.rules.RuleSet.default.get("006").get.copy(length = None))))
@@ -56,80 +203,92 @@ object SparkEntry {
         .select($"doc_id", explode($"violations").as("v"))
         .select($"doc_id", $"v.rule_id",
           array_join($"v.loc", "/").as("loc_path"), $"v.msg")
-    }),
+    }, fixtureOracle(_ != "control_field_length_invalid")),
     // Errors-as-JSON export (reference ValidationError.json(),
     // README.md:96-144): canonical per-record serialization of the
     // violation list; reference-shape parity is unit-tested byte-for-byte
     // in FieldErrorsSpec, the oracle pins cross-run determinism.
-    "marc_errors_json" -> ((s, _) => {
+    Query("marc_errors_json", (s, _) => {
       import s.implicits._
       val docs = Seq(Fixtures.invalidDoc).toDF()
       RowValidator.withViolations(docs)
         .select($"doc_id", graft.expr.MarcErrors.jsonColumn($"violations").as("errors_json"))
+    }, {
+      val errorsJson = graft.expr.MarcErrors.json(
+        graft.expr.MarcValidator.validate(Fixtures.invalidDoc.spans, graft.rules.RuleSet.default))
+      s"SELECT '1234567890' AS doc_id, ${sqlStr(errorsJson)} AS errors_json"
     }),
     // A1-A12: full rule surface over the golden fixtures; oracle is the
-    // expected-violation VALUES literal (the reference's own expectations,
-    // /root/reference/tests/test_models.py:120-152).
-    "marc_fixture_violations" -> ((s, _) => {
+    // expected-violation VALUES literal (the reference's own expectations).
+    Query("marc_fixture_violations", (s, _) => {
       import s.implicits._
       val docs = Seq(Fixtures.validDoc, Fixtures.invalidDoc).toDF()
       RowValidator.violations(docs)
         .select($"doc_id", $"rule_id", array_join($"loc", "/").as("loc_path"), $"msg")
-    }),
+    }, fixtureOracle(_ => true)),
     // Rule surface over a 500-doc synthetic corpus keyed by the driver's
     // documents.doc_id; per-rule violation counts are closed-form in doc_id.
-    "marc_corpus_verdicts" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
-      RowValidator.violations(docs)
-        .groupBy($"rule_id").agg(count(lit(1)).as("n"))
-    }),
-    "marc_corpus_passed" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
-      RowValidator.verdicts(docs)
+    Query("marc_corpus_verdicts", (s, dir) => {
+      RowValidator.violations(synthCorpus(s, dir))
+        .groupBy(col("rule_id")).agg(count(lit(1)).as("n"))
+    }, """
+      SELECT 'non_repeatable_field' AS rule_id, count(*) AS n FROM documents WHERE doc_id % 9 = 1
+      UNION ALL SELECT 'missing_required_field', count(*) FROM documents WHERE doc_id % 9 = 2
+      UNION ALL SELECT 'multiple_1xx_fields', count(*) FROM documents WHERE doc_id % 9 = 3
+      UNION ALL SELECT 'control_field_length_invalid', count(*) FROM documents WHERE doc_id % 9 = 4
+      UNION ALL SELECT 'invalid_indicator', 2 * count(*) FROM documents WHERE doc_id % 9 = 5
+      UNION ALL SELECT 'subfield_not_allowed', count(*) FROM documents WHERE doc_id % 9 = 6
+      UNION ALL SELECT 'non_repeatable_subfield', count(*) FROM documents WHERE doc_id % 9 = 7
+      UNION ALL SELECT 'string_pattern_mismatch', count(*) FROM documents WHERE doc_id % 9 = 8
+    """),
+    Query("marc_corpus_passed", (s, dir) => {
+      RowValidator.verdicts(synthCorpus(s, dir))
         .agg(
-          count(when($"passed", 1)).as("n_passed"),
-          count(when(!$"passed", 1)).as("n_failed"),
+          count(when(col("passed"), 1)).as("n_passed"),
+          count(when(!col("passed"), 1)).as("n_failed"),
           count(lit(1)).as("n_docs"))
-    }),
+    }, "SELECT count(*) FILTER (WHERE doc_id % 9 = 0) AS n_passed, "
+      + "count(*) FILTER (WHERE doc_id % 9 <> 0) AS n_failed, count(*) AS n_docs FROM documents"),
     // span-sequence invariant check (north-star per-row invariant: kind,
     // text, media_ref, ORDER) over the synthetic corpus with deterministic
     // corruption injected — every 7th doc's spans reversed (order break),
-    // every 11th doc's media_refs nulled (media break); counts are
-    // closed-form in doc_id for the oracle
-    "span_invariant_check" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
+    // every 11th doc's media_refs nulled (media break). Every Synth doc
+    // carries >= 3 spans (LDR + 008 + media at minimum), so every reversed
+    // doc breaks order and every stripped doc breaks media pairing — the
+    // oracle counts are exactly the divisibility classes.
+    Query("span_invariant_check", (s, dir) => {
+      val docs = synthCorpus(s, dir)
       val corrupted = docs
         .withColumn("spans",
-          when(substring($"doc_id", 5, 20).cast("long") % 7 === 0, reverse($"spans"))
-            .otherwise($"spans"))
+          when(substring(col("doc_id"), 5, 20).cast("long") % 7 === 0, reverse(col("spans")))
+            .otherwise(col("spans")))
         .withColumn("spans",
-          when(substring($"doc_id", 5, 20).cast("long") % 11 === 0,
-            transform($"spans", sp => struct(
+          when(substring(col("doc_id"), 5, 20).cast("long") % 11 === 0,
+            transform(col("spans"), sp => struct(
               sp.getField("kind").as("kind"), sp.getField("text").as("text"),
               lit(null).cast("string").as("media_ref"),
               sp.getField("offset").as("offset"))))
-            .otherwise($"spans"))
+            .otherwise(col("spans")))
       checks.SpanInvariant.check(corrupted).agg(
         count(lit(1)).as("n_docs"),
-        count(when(not($"span_order_ok"), 1)).as("n_order_bad"),
-        count(when(not($"media_ref_ok"), 1)).as("n_media_bad"))
-    }),
+        count(when(not(col("span_order_ok")), 1)).as("n_order_bad"),
+        count(when(not(col("media_ref_ok")), 1)).as("n_media_bad"))
+    }, """
+      SELECT count(*)::BIGINT AS n_docs,
+             count(*) FILTER (WHERE doc_id % 7 = 0)::BIGINT AS n_order_bad,
+             count(*) FILTER (WHERE doc_id % 11 = 0)::BIGINT AS n_media_bad
+      FROM documents
+    """),
     // exact uniqueness with two-phase salted aggregation (north-star op)
-    "unique_dup_orderkeys" -> ((s, dir) => {
+    Query("unique_dup_orderkeys", (s, dir) => {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       Uniqueness.dupStats(li, col("l_orderkey"))
-    }),
+    }, """
+      SELECT count(*)::BIGINT AS n_dup_keys, coalesce(sum(n - 1), 0)::BIGINT AS n_surplus_rows
+      FROM (SELECT count(*) AS n FROM lineitem GROUP BY l_orderkey HAVING count(*) > 1)
+    """),
     // broadcast-hash referential checks (anti-join = dangling refs)
-    "referential_dangling" -> ((s, dir) => {
+    Query("referential_dangling", (s, dir) => {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val part = s.read.parquet(s"$dir/part.parquet")
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -142,33 +301,59 @@ object SparkEntry {
       val c = Referential.dangling(part, col("p_partkey"), li, col("l_partkey"))
         .agg(count(lit(1)).as("n")).withColumn("check", lit("unreferenced_parts"))
       a.unionByName(b).unionByName(c).select(col("check"), col("n"))
-    }),
+    }, """
+      SELECT 'lineitem_part' AS check, count(*) FILTER (WHERE p.p_partkey IS NULL)::BIGINT AS n
+      FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
+      UNION ALL
+      SELECT 'events_customer', count(*) FILTER (WHERE c.c_custkey IS NULL)::BIGINT
+      FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
+      UNION ALL
+      SELECT 'unreferenced_parts', count(*)::BIGINT
+      FROM part p WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
+    """),
     // single-pass typed column stats (custom TypedImperativeAggregate)
-    "col_stats_documents" -> ((s, dir) => {
+    Query("col_stats_documents", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       def one(cn: String) = docs
         .agg(StatsAgg.columnStats(col(cn)).as("st"))
         .select(lit(cn).as("col_name"), col("st.n_rows"), col("st.n_nulls"),
           col("st.min_s"), col("st.max_s"))
       one("text").unionByName(one("lang")).unionByName(one("source"))
-    }),
+    }, """
+      SELECT 'text' AS col_name, count(*)::BIGINT AS n_rows,
+             (count(*) - count(text))::BIGINT AS n_nulls, min(text) AS min_s, max(text) AS max_s
+      FROM documents
+      UNION ALL SELECT 'lang', count(*)::BIGINT, (count(*) - count(lang))::BIGINT, min(lang), max(lang) FROM documents
+      UNION ALL SELECT 'source', count(*)::BIGINT, (count(*) - count(source))::BIGINT, min(source), max(source) FROM documents
+    """),
     // length histogram from the same aggregator (fan-out only at the tiny end)
-    "length_hist_documents" -> ((s, dir) => {
+    Query("length_hist_documents", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.agg(StatsAgg.columnStats(col("text")).as("st"))
         .select(explode(col("st.len_hist")).as(Seq("bucket", "cnt")))
-    }),
+    }, """
+      SELECT least(length(text) // 100, 63)::INT AS bucket, count(*)::BIGINT AS cnt
+      FROM documents WHERE text IS NOT NULL GROUP BY 1
+    """),
     // PSI drift between two event populations (even vs odd event_id)
-    "drift_psi_events" -> ((s, dir) => {
+    Query("drift_psi_events", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
       Drift.psi(ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1),
         col("event_type"))
         .select(round(col("psi"), 6).as("psi"))
-    }),
+    }, """
+      WITH cur AS (SELECT event_type AS cat, count(*) AS n_cur FROM events WHERE event_id % 2 = 0 GROUP BY 1),
+           base AS (SELECT event_type AS cat, count(*) AS n_base FROM events WHERE event_id % 2 = 1 GROUP BY 1),
+           j AS (SELECT coalesce(n_cur, 0) AS n_cur, coalesce(n_base, 0) AS n_base
+                 FROM cur FULL OUTER JOIN base USING (cat)),
+           pq AS (SELECT greatest(n_cur / (SELECT sum(n_cur) FROM j), 1e-6) AS p,
+                         greatest(n_base / (SELECT sum(n_base) FROM j), 1e-6) AS q FROM j)
+      SELECT round(sum((p - q) * ln(p / q)), 6) AS psi FROM pq
+    """),
     // per-group PSI (the batch face of the streaming windowed drift check,
     // Drift.psiGrouped + StreamingValidation.kindFrequencyStream): hourly
     // event-type mixes scored against the corpus-wide histogram
-    "drift_psi_hourly" -> ((s, dir) => {
+    Query("drift_psi_hourly", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
       val grouped = ev
         .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type").as("cat"))
@@ -177,42 +362,100 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_base"))
       Drift.psiGrouped(grouped, baseline, col("h"), col("cat"), col("n"))
         .select(col("g").as("hour_ts"), round(col("psi"), 6).as("psi"))
-    }),
+    }, """
+      WITH cur AS (SELECT date_trunc('hour', ts) AS h, event_type AS cat, count(*) AS n_cur
+                   FROM events GROUP BY 1, 2),
+           base AS (SELECT event_type AS cat, count(*) AS n_base FROM events GROUP BY 1),
+           frame AS (SELECT h, cat FROM (SELECT DISTINCT h FROM cur) CROSS JOIN base
+                     UNION SELECT h, cat FROM cur),
+           j AS (SELECT f.h, coalesce(c.n_cur, 0) AS n_cur, coalesce(b.n_base, 0) AS n_base
+                 FROM frame f
+                 LEFT JOIN cur c ON f.h = c.h AND f.cat = c.cat
+                 LEFT JOIN base b ON f.cat = b.cat),
+           pq AS (SELECT h,
+                    greatest(n_cur / sum(n_cur) OVER (PARTITION BY h), 1e-6) AS p,
+                    greatest(n_base / (SELECT sum(n_base) FROM base), 1e-6) AS q
+                  FROM j)
+      SELECT h AS hour_ts, round(sum((p - q) * ln(p / q)), 6) AS psi
+      FROM pq GROUP BY h
+    """),
     // bucketed-CDF KS drift over the value column
-    "drift_ks_events" -> ((s, dir) => {
+    Query("drift_ks_events", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
       Drift.ksBucketed(ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1),
         col("value"), lo = 0.0, hi = 500.0, buckets = 100)
         .select(round(col("ks"), 6).as("ks"))
-    }),
+    }, """
+      WITH h AS (
+        SELECT least(greatest(floor(value / 5.0), 0), 99)::BIGINT AS bucket,
+               count(*) FILTER (WHERE event_id % 2 = 0) AS n_cur,
+               count(*) FILTER (WHERE event_id % 2 = 1) AS n_base
+        FROM events WHERE value IS NOT NULL GROUP BY 1),
+           c AS (
+        SELECT sum(n_cur) OVER (ORDER BY bucket) / (SELECT sum(n_cur) FROM h) AS cdf_cur,
+               sum(n_base) OVER (ORDER BY bucket) / (SELECT sum(n_base) FROM h) AS cdf_base
+        FROM h)
+      SELECT round(max(abs(cdf_cur - cdf_base)), 6) AS ks FROM c
+    """),
     // auto-ranged KS (two-pass: combined min/max -> bucketed CDFs) — the
     // unknown-value-range form a 100 TB corpus needs; oracle re-derives the
     // range and bucket formula in SQL
-    "drift_ks_auto" -> ((s, dir) => {
+    Query("drift_ks_auto", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
       Drift.ksAuto(ev.where(col("event_id") % 2 === 0),
         ev.where(col("event_id") % 2 === 1), col("value"), buckets = 100)
         .select(round(col("ks"), 6).as("ks"))
-    }),
+    }, """
+      WITH r AS (SELECT min(value)::DOUBLE AS lo, max(value)::DOUBLE AS hi
+                 FROM events WHERE value IS NOT NULL),
+           h AS (
+        SELECT least(greatest(floor((value - r.lo) /
+                 ((CASE WHEN r.hi > r.lo THEN r.hi ELSE r.lo + 1.0 END - r.lo) / 100)), 0), 99)::BIGINT AS bucket,
+               count(*) FILTER (WHERE event_id % 2 = 0) AS n_cur,
+               count(*) FILTER (WHERE event_id % 2 = 1) AS n_base
+        FROM events, r WHERE value IS NOT NULL GROUP BY 1),
+           c AS (
+        SELECT sum(n_cur) OVER (ORDER BY bucket) / (SELECT sum(n_cur) FROM h) AS cdf_cur,
+               sum(n_base) OVER (ORDER BY bucket) / (SELECT sum(n_base) FROM h) AS cdf_base
+        FROM h)
+      SELECT round(max(abs(cdf_cur - cdf_base)), 6) AS ks FROM c
+    """),
     // span-kind frequency histogram over the synthetic corpus (the input to
-    // kind-frequency drift); counts are closed-form in doc_id defect class
-    "drift_kind_freq" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      Drift.kindFrequencies(Synth.corpusFromIds(ids).toDF())
-    }),
+    // kind-frequency drift); counts are closed-form per doc_id defect class
+    // (Synth.doc layout)
+    Query("drift_kind_freq", (s, dir) => Drift.kindFrequencies(synthCorpus(s, dir)), """
+      SELECT kind, freq FROM (
+        SELECT 'LDR' AS kind, count(*)::BIGINT AS freq FROM documents
+        UNION ALL SELECT '001', (count(*) + count(*) FILTER (WHERE doc_id % 9 = 1))::BIGINT FROM documents
+        UNION ALL SELECT '006', (count(*) FILTER (WHERE doc_id % 9 = 4))::BIGINT FROM documents
+        UNION ALL SELECT '008', count(*)::BIGINT FROM documents
+        UNION ALL SELECT '010', (count(*) FILTER (WHERE doc_id % 9 = 7))::BIGINT FROM documents
+        UNION ALL SELECT '020', (count(*) FILTER (WHERE doc_id % 9 = 6))::BIGINT FROM documents
+        UNION ALL SELECT '100', (count(*) FILTER (WHERE doc_id % 9 = 3))::BIGINT FROM documents
+        UNION ALL SELECT '110', (count(*) FILTER (WHERE doc_id % 9 = 3))::BIGINT FROM documents
+        UNION ALL SELECT '050', count(*)::BIGINT FROM documents
+        UNION ALL SELECT '245', (count(*) FILTER (WHERE doc_id % 9 <> 2))::BIGINT FROM documents
+        UNION ALL SELECT '300', count(*)::BIGINT FROM documents
+        UNION ALL SELECT '336', (count(*) FILTER (WHERE doc_id % 9 = 5))::BIGINT FROM documents
+        UNION ALL SELECT '500', count(*)::BIGINT FROM documents
+        UNION ALL SELECT 'media', count(*)::BIGINT FROM documents
+        UNION ALL SELECT '910', count(*)::BIGINT FROM documents
+      ) WHERE freq > 0
+    """),
     // exact dedup over a corpus with injected duplicates (every 10th doc)
-    "dedup_exact_docs" -> ((s, dir) => {
+    Query("dedup_exact_docs", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val withDups = docs.unionByName(docs.where(col("doc_id") % 10 === 0))
       Dedup.exactDupGroups(withDups, col("text"))
         .agg(count(lit(1)).as("n_groups"), sum(col("n")).as("n_rows_in_groups"))
-    }),
+    }, """
+      SELECT count(*)::BIGINT AS n_groups, (2 * count(*))::BIGINT AS n_rows_in_groups
+      FROM documents WHERE doc_id % 10 = 0
+    """),
     // C4-style global line dedup: docs are reshaped into 3 lines (shared
     // boilerplate header, the doc's own text, shared footer); the shared
     // lines survive only in the lowest-doc_id document
-    "dedup_lines" -> ((s, dir) => {
+    Query("dedup_lines", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val src = docs.select(col("doc_id"), concat_ws("\n",
         lit("== shared boilerplate header =="), col("text"),
@@ -220,50 +463,94 @@ object SparkEntry {
       Dedup.lineDedup(src, col("doc_id"), col("text"))
         .select(col("id").as("doc_id"), col("n_kept"), col("n_dropped"),
           col("text_clean"))
-    }),
+    }, """
+      WITH src AS (
+        SELECT doc_id, '== shared boilerplate header ==' || chr(10) || text
+               || chr(10) || '== shared footer ==' AS t
+        FROM documents
+      ), ls AS (
+        SELECT doc_id, string_split(t, chr(10)) AS parts FROM src
+      ), lines AS (
+        SELECT doc_id, unnest(generate_series(0, len(parts) - 1)) AS idx,
+               unnest(parts) AS line
+        FROM ls
+      ), elig AS (
+        SELECT * FROM lines WHERE length(line) >= 10
+      ), keptE AS (
+        SELECT doc_id, idx, line FROM (
+          SELECT doc_id, idx, line,
+                 row_number() OVER (PARTITION BY line ORDER BY doc_id, idx) AS rn
+          FROM elig)
+        WHERE rn = 1
+      ), kept AS (
+        SELECT doc_id, idx, line FROM lines WHERE length(line) < 10
+        UNION ALL SELECT doc_id, idx, line FROM keptE
+      ), agg AS (
+        SELECT doc_id, count(*) AS n_kept,
+               string_agg(line, chr(10) ORDER BY idx) AS text_clean
+        FROM kept GROUP BY doc_id
+      ), tot AS (
+        SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id
+      )
+      SELECT a.doc_id, n_kept::BIGINT AS n_kept,
+             (n_lines - n_kept)::BIGINT AS n_dropped, text_clean
+      FROM agg a JOIN tot USING (doc_id)
+    """),
     // minhash+LSH near-dup pairs, exact-verified at jaccard >= 0.8; the
     // oracle recomputes exact 3-gram jaccard pairs in SQL
-    "dedup_near_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // testdata documents are one parquet row group -> fan the CPU-heavy
-      // signature stage out to the session's cores (no-op shape at scale)
-      Dedup.minhashPairs(docs, col("doc_id"), col("text"), threshold = 0.8,
-          inputPartitions = s.sparkContext.defaultParallelism)
-        .select(col("a"), col("b"))
-    }),
+    Query("dedup_near_pairs", (s, dir) => nearPairs(s.read.parquet(s"$dir/documents.parquet")),
+      s"WITH $VerifiedPairs SELECT a, b FROM pairs"),
     // connected-components cluster resolution over the near-dup pair graph
     // (keep-one-per-cluster step); oracle = recursive CTE reachability over
     // the same exact-jaccard pair set
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        threshold = 0.8, inputPartitions = s.sparkContext.defaultParallelism)
-      Dedup.dupClusters(pairs.select(col("a"), col("b")))
+    Query("dedup_clusters", (s, dir) => {
+      Dedup.dupClusters(nearPairs(s.read.parquet(s"$dir/documents.parquet")))
         .select(col("id").as("doc_id"), col("cluster"))
-    }),
+    }, s"WITH RECURSIVE $Clusters SELECT id AS doc_id, cluster::BIGINT AS cluster FROM clusters"),
     // the composed keep-one dedup pipeline (pairs -> connected components ->
     // min-id survivor per cluster -> deduped corpus): the operator users
-    // actually run. Oracle: the dedup_clusters recursive CTE extended with
-    // min-per-component, anti-filtering the corpus; the surviving TEXT
+    // actually run. Oracle: the dedup_clusters components, dropping every
+    // cluster member except its minimum id; the surviving TEXT
     // byte-compares, not just the id list.
-    "dedup_keep_one" -> ((s, dir) => {
+    Query("dedup_keep_one", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        threshold = 0.8, inputPartitions = s.sparkContext.defaultParallelism)
-      Dedup.keepOnePerCluster(docs, col("doc_id"), pairs.select(col("a"), col("b")))
+      Dedup.keepOnePerCluster(docs, col("doc_id"), nearPairs(docs))
         .select(col("doc_id"), col("text"))
-    }),
+    }, s"""
+      WITH RECURSIVE $Clusters
+      SELECT d.doc_id, d.text FROM documents d
+      WHERE d.doc_id NOT IN (SELECT id FROM clusters WHERE id <> cluster)
+    """),
     // intra-doc repeated-line removal: zero-shuffle HOF pass; oracle replays
-    // first-occurrence keeps with a min(i)-per-(doc, line) window
-    "dedup_lines_intra" -> ((s, dir) => {
+    // first-occurrence keeps with a min(i)-per-(doc, line) window (short
+    // lines always keep: same minLen contract as the global lineDedup)
+    Query("dedup_lines_intra", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.lineDedupIntra(docs, col("doc_id"), col("text"))
         .select(col("id").as("doc_id"), col("n_kept"), col("n_dropped"),
           col("text_clean"))
-    }),
+    }, """
+      WITH l AS (
+        SELECT doc_id, unnest(string_split(text, chr(10))) AS line,
+               generate_subscripts(string_split(text, chr(10)), 1) AS i
+        FROM documents WHERE text IS NOT NULL),
+      k AS (
+        SELECT doc_id, line, i,
+               CASE WHEN length(line) >= 10
+                    THEN min(i) OVER (PARTITION BY doc_id, line)
+                    ELSE i END AS firsti,
+               count(*) OVER (PARTITION BY doc_id) AS n_lines
+        FROM l)
+      SELECT doc_id, count(*)::BIGINT AS n_kept,
+             (any_value(n_lines) - count(*))::BIGINT AS n_dropped,
+             coalesce(string_agg(line, chr(10) ORDER BY i), '') AS text_clean
+      FROM k WHERE i = firsti GROUP BY doc_id
+    """),
     // the end-to-end curation composition: quality gate -> stratified
-    // deterministic sample -> per-domain cap; every stage oracle-replayable
-    "curation_pipeline" -> ((s, dir) => {
+    // deterministic sample -> per-domain cap; the oracle replays the same
+    // chain stage for stage (quality gate -> FNV stratified sample ->
+    // row_number cap)
+    Query("curation_pipeline", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
       val gated = docs.where(TextAnalysis.qualityPass(col("text")))
@@ -272,14 +559,37 @@ object SparkEntry {
         salt = "cur")
       ops.Sampling.capPerGroup(sampled, col("source"), col("doc_id"), 8)
         .select(col("g").as("source"), col("id").as("doc_id"))
-    }),
+    }, s"""
+      WITH m AS (
+        SELECT doc_id, lang, source, length(text) AS n_chars,
+               len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+               length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS n_punct,
+               length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits
+        FROM documents WHERE text IS NOT NULL),
+      gated AS (
+        SELECT doc_id, lang, source FROM m
+        WHERE n_tokens BETWEEN 5 AND 100000 AND n_punct * 4 <= n_chars
+              AND n_digits * 4 <= n_chars),
+      h AS (
+        SELECT doc_id, lang, source, ${fnv("doc_id::VARCHAR || 'cur'")}::HUGEINT AS u
+        FROM gated),
+      samp AS (
+        SELECT doc_id, source FROM h
+        WHERE ${signedPmod("u", 1000000L)} <
+          CASE lang WHEN 'en' THEN 600000 WHEN 'zh' THEN 400000 ELSE 800000 END)
+      SELECT source, doc_id FROM (
+        SELECT source, doc_id,
+               row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        FROM samp)
+      WHERE rn <= 8
+    """),
     // inverted-index exact n-gram Jaccard pairs (the small-corpus baseline
-    // the LSH path is validated against); same oracle SQL as dedup_near_pairs
-    "dedup_ngram_pairs" -> ((s, dir) => {
+    // the LSH path is validated against); same oracle as dedup_near_pairs
+    Query("dedup_ngram_pairs", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"), threshold = 0.8)
         .select(col("a"), col("b"))
-    }),
+    }, s"WITH $VerifiedPairs SELECT a, b FROM pairs"),
     // embedding near-dup via random-hyperplane LSH + exact cosine verify.
     // The synthetic embeddings are near-orthogonal (max pairwise cosine
     // ~0.51), so near-dups are planted deterministically: every 25th vector
@@ -287,7 +597,7 @@ object SparkEntry {
     // (cosine ~0.97). minCosine=0.75 sits in the wide gap between planted
     // (~0.97) and background (~0.51) pairs, so float rounding can't flip
     // membership and the oracle is an exact quadratic recomputation.
-    "dedup_embed_pairs" -> ((s, dir) => {
+    Query("dedup_embed_pairs", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val planted = emb.where(col("vec_id") % 25 === 0)
@@ -297,81 +607,133 @@ object SparkEntry {
       Dedup.embeddingCosinePairs(emb.unionByName(planted),
           col("vec_id"), col("embedding"), minCosine = 0.75, bands = 32)
         .select(col("a"), col("b"))
-    }),
+    }, """
+      WITH planted AS (
+        SELECT vec_id + 1000000 AS vec_id,
+               list_concat(embedding[1:60], [0.0, 0.0, 0.0, 0.0]::FLOAT[]) AS embedding
+        FROM embeddings WHERE vec_id % 25 = 0
+      ), allv AS (
+        SELECT vec_id, embedding FROM embeddings
+        UNION ALL SELECT vec_id, embedding FROM planted
+      )
+      SELECT l.vec_id AS a, r.vec_id AS b
+      FROM allv l JOIN allv r ON l.vec_id < r.vec_id
+      WHERE list_cosine_similarity(l.embedding, r.embedding) >= 0.75
+    """),
     // brute-force cosine top-10 to the vec_id=0 embedding (ANN baseline)
-    "ann_topk" -> ((s, dir) => {
+    Query("ann_topk", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val top = Similarity.topKCosine(
-        emb.where(col("vec_id") =!= 0), col("vec_id"), col("embedding"), q, 10)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
-        .select(col("rank"), col("id").as("vec_id"))
-    }),
+      ranked(Similarity.topKCosine(
+        emb.where(col("vec_id") =!= 0), col("vec_id"), col("embedding"), probeVec(emb), 10))
+    }, AnnTopOracle),
     // IVF ANN (the scale path): spherical k-means quantizer trained with the
     // VectorAvgAgg k×dims-state aggregation, inverted-list assignment, probe
     // search. Probing all k cells is exact by construction — the oracle pins
     // the full machinery (train/assign/search) to the brute-force answer;
     // partial-probe recall + partition pruning are covered in IvfSpec.
-    "ann_ivf_topk" -> ((s, dir) => {
+    Query("ann_ivf_topk", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
+      val q = probeVec(emb)
       val rest = emb.where(col("vec_id") =!= 0)
       val model = ops.Ivf.train(rest, col("vec_id"), col("embedding"), k = 16, iters = 2)
       val index = ops.Ivf.assign(rest, col("vec_id"), col("embedding"), model)
-      val top = ops.Ivf.search(index, model, q, topK = 10, nProbe = 16)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
-        .select(col("rank"), col("id").as("vec_id"))
-    }),
+      ranked(ops.Ivf.search(index, model, q, topK = 10, nProbe = 16))
+    }, AnnTopOracle),
     // IVF PARTIAL probe driven end-to-end: assign with the deterministic
     // axis model (cluster = argmax of the first 4 components — the one
     // assignment a SQL oracle can recompute), write the index
     // partitionBy("cluster") to disk, probe 2 of 4 clusters (partition
     // pruning at the scan — file-count assertion in IvfSpec), exact
-    // re-rank. Oracle: brute-force top-k over the same probed subset,
-    // clusters + probes re-derived in DuckDB SQL.
-    "ann_ivf_pruned" -> ((s, dir) => {
+    // re-rank. Oracle: brute-force top-k over the same probed subset, with
+    // cluster = argmax(embedding[1..4]) and lowest-index tie-break (matches
+    // Ivf.clusterOf: cosine vs axis centroid e_j is embedding[j]/|v|, same
+    // argmax) and probes = top-2 clusters by the query's own components
+    // (matches Model.rankClusters).
+    Query("ann_ivf_pruned", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
+      val q = probeVec(emb)
       val rest = emb.where(col("vec_id") =!= 0)
       val model = ops.Ivf.Model.axis(4, q.length)
       val idxDir = s"/tmp/graft_ivf_pruned_${new java.io.File(dir).getName}"
       ops.Ivf.writeIndex(
         ops.Ivf.assign(rest, col("vec_id"), col("embedding"), model), idxDir)
       val index = ops.Ivf.readIndex(s, idxDir)
-      val top = ops.Ivf.search(index, model, q, topK = 10, nProbe = 2)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
-        .select(col("rank"), col("id").as("vec_id"))
-    }),
+      ranked(ops.Ivf.search(index, model, q, topK = 10, nProbe = 2))
+    }, """
+      WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+           probes AS (
+             SELECT j - 1 AS cluster
+             FROM q, (SELECT unnest(generate_series(1, 4)) AS j) t
+             ORDER BY qe[j] DESC, j LIMIT 2),
+           assigned AS (
+             SELECT vec_id, embedding,
+                    CASE WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3]
+                              AND embedding[1] >= embedding[4] THEN 0
+                         WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1
+                         WHEN embedding[3] >= embedding[4] THEN 2
+                         ELSE 3 END AS cluster
+             FROM embeddings WHERE vec_id <> 0),
+           scored AS (
+             SELECT vec_id, list_cosine_similarity(a.embedding, q.qe) AS sim
+             FROM assigned a, q WHERE a.cluster IN (SELECT cluster FROM probes))
+      SELECT row_number() OVER (ORDER BY sim DESC, vec_id) AS rank, vec_id
+      FROM scored ORDER BY sim DESC, vec_id LIMIT 10
+    """),
     // token counting: whitespace tokens + BPE-ish subword pieces per doc
-    "text_token_counts" -> ((s, dir) => {
+    Query("text_token_counts", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
         TextAnalysis.subwordCount(col("text")).cast("long").as("n_subwords"))
-    }),
+    }, """
+      SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+             len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))::BIGINT AS n_subwords
+      FROM documents
+    """),
     // vocabulary-driven greedy longest-match wordpiece counts (real subword
     // tokenization, replacing the letter-run proxy as the token-budget
-    // signal); the oracle replays the identical greedy scan as a recursive
-    // CTE over (word, position) states with the SAME vocabulary literal
-    "text_subword_bpe" -> ((s, dir) => {
+    // signal). The oracle replays the identical greedy scan as a recursive
+    // CTE: each (word, pos) state advances by the longest vocabulary piece
+    // matching at pos (else 1, the unknown-char fallback), with the
+    // vocabulary literal generated from WordpieceKernel.Vocab. Words are
+    // ASCII-letter runs of the RAW text, lowercased per word (lower() on
+    // pure ASCII is engine-identical); lower(text) FIRST would apply
+    // DuckDB's Unicode case folding, which can map non-ASCII codepoints
+    // (U+212A, U+0130) into ASCII letters the kernel treats as separators.
+    Query("text_subword_bpe", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
       docs.select(col("doc_id"), TextAnalysis.subwordStats(col("text")).as("w"))
         .select(col("doc_id"),
           col("w.n_words").cast("long").as("n_words"),
           col("w.n_pieces").cast("long").as("n_pieces"))
-    }),
+    }, s"""
+      WITH RECURSIVE words AS (
+        SELECT doc_id, unnest(list_transform(
+          regexp_extract_all(text, '[a-zA-Z]+'), t -> lower(t))) AS w
+        FROM documents WHERE text IS NOT NULL),
+      steps AS (
+        SELECT doc_id, w, 0::INT AS pos, 0::INT AS n FROM words
+        UNION ALL
+        SELECT s.doc_id, s.w,
+               (s.pos + coalesce(list_max(list_transform(
+                  list_filter(${graft.expr.WordpieceKernel.Vocab
+                    .map(t => s"'$t'").mkString("[", ",", "]")},
+                    t -> substr(s.w, s.pos + 1, length(t)) = t),
+                  t -> length(t))), 1))::INT,
+               (s.n + 1)::INT
+        FROM steps s WHERE s.pos < length(s.w)),
+      perword AS (SELECT doc_id, n FROM steps WHERE pos >= length(w)),
+      perdoc AS (
+        SELECT doc_id, count(*)::BIGINT AS n_words, sum(n)::BIGINT AS n_pieces
+        FROM perword GROUP BY doc_id)
+      SELECT d.doc_id, coalesce(p.n_words, 0)::BIGINT AS n_words,
+             coalesce(p.n_pieces, 0)::BIGINT AS n_pieces
+      FROM (SELECT doc_id FROM documents WHERE text IS NOT NULL) d
+      LEFT JOIN perdoc p USING (doc_id)
+    """),
     // quality metrics + gate per doc (integer-only for oracle parity)
-    "text_quality" -> ((s, dir) => {
+    Query("text_quality", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(col("doc_id"), TextAnalysis.qualityMetrics(col("text")).as("m"),
           TextAnalysis.qualityPass(col("text")).as("quality_pass"))
@@ -379,16 +741,46 @@ object SparkEntry {
           col("m.n_punct").cast("long").as("n_punct"),
           col("m.n_digits").cast("long").as("n_digits"),
           col("m.n_stopwords").cast("long").as("n_stopwords"), col("quality_pass"))
-    }),
+    }, s"""
+      WITH m AS (
+        SELECT doc_id, length(text) AS n_chars,
+               len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+               length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS n_punct,
+               length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits,
+               len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                   t -> list_contains(${TextAnalysis.StopwordsEn.map(w => s"'$w'").mkString("[", ", ", "]")}, t))) AS n_stopwords
+        FROM documents)
+      SELECT doc_id, n_chars::BIGINT AS n_chars, n_punct::BIGINT AS n_punct,
+             n_digits::BIGINT AS n_digits, n_stopwords::BIGINT AS n_stopwords,
+             (n_tokens BETWEEN 5 AND 100000 AND n_punct * 4 <= n_chars
+              AND n_digits * 4 <= n_chars) AS quality_pass
+      FROM m
+    """),
     // language-id heuristic distribution. Oracle-checked: the marker-word
     // scores are plain SQL and the argmax tie-break is DEFINED (max score,
     // then lexicographically-largest language code — Spark struct greatest
     // semantics), so DuckDB reproduces it with a (score DESC, lang DESC)
     // window; zero hits -> 'und'
-    "text_langid_dist" -> ((s, dir) => {
+    Query("text_langid_dist", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(TextAnalysis.langId(col("text")).as("lang_pred"))
         .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
+    }, {
+      val scoreSelects = TextAnalysis.LangMarkers.map { case (lang, words) =>
+        val arr = words.map(w => s"'$w'").mkString("[", ", ", "]")
+        s"SELECT doc_id, '$lang' AS lang, " +
+          s"len(list_filter(toks, t -> list_contains($arr, t))) AS s FROM t"
+      }.mkString("\n        UNION ALL ")
+      s"""
+      WITH $Tokens, scores AS (
+        $scoreSelects
+      ), best AS (
+        SELECT doc_id, s, lang,
+               row_number() OVER (PARTITION BY doc_id ORDER BY s DESC, lang DESC) AS rn
+        FROM scores)
+      SELECT CASE WHEN s = 0 THEN 'und' ELSE lang END AS lang_pred, count(*)::BIGINT AS n
+      FROM best WHERE rn = 1 GROUP BY 1
+      """
     }),
     // char-n-gram language ID over a derived multilingual corpus: each doc
     // gets a deterministic language snippet (by doc_id % 5) prepended to a
@@ -396,7 +788,7 @@ object SparkEntry {
     // five languages. The oracle recomputes every per-language score with
     // the same replace()-count semantics and the same tie-break
     // (score DESC, lang DESC), both generated from the SAME Scala tables.
-    "text_langid_ngram" -> ((s, dir) => {
+    Query("text_langid_ngram", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
       val sn = typedLit(TextAnalysis.LangSnippets.map(_._2))
@@ -405,52 +797,120 @@ object SparkEntry {
           lit(" "), substring(lower(col("text")), 1, 60)).as("t2"))
       derived.select(TextAnalysis.langIdNgram(col("t2")).as("lang"))
         .groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
+    }, {
+      val snippetArr = TextAnalysis.LangSnippets.map { case (_, s) => s"'$s'" }
+        .mkString("[", ", ", "]")
+      val scoreSelects = TextAnalysis.LangProfiles.map { case (lang, gs) =>
+        val terms = gs.map { g =>
+          s"((length(t2) - length(replace(t2, '$g', ''))) / ${g.length})::INT"
+        }.mkString(" + ")
+        s"SELECT doc_id, '$lang' AS lang, ($terms) AS s FROM t"
+      }.mkString("\n        UNION ALL ")
+      s"""
+      WITH t AS (
+        SELECT doc_id,
+               $snippetArr[(doc_id % 5)::INT + 1] || ' ' || substr(lower(text), 1, 60) AS t2
+        FROM documents WHERE text IS NOT NULL
+      ), scores AS (
+        $scoreSelects
+      ), best AS (
+        SELECT doc_id, s, lang,
+               row_number() OVER (PARTITION BY doc_id ORDER BY s DESC, lang DESC) AS rn
+        FROM scores)
+      SELECT CASE WHEN s = 0 THEN 'und' ELSE lang END AS lang, count(*)::BIGINT AS cnt
+      FROM best WHERE rn = 1 GROUP BY 1
+      """
     }),
     // simhash near-dup pairs. Oracle-checked: the FNV-1a token hash and the
-    // per-bit majority vote are recomputed in plain DuckDB SQL (modular
-    // HUGEINT multiply), then all pairs at hamming <= maxHamming — full
-    // value parity with the engine's hash family, not just row counts.
+    // per-bit majority vote -> signed 64-bit sig are recomputed in plain
+    // DuckDB SQL, then ALL pairs at hamming <= maxHamming — full value
+    // parity with the engine's hash family, not just row counts.
     // maxHamming=4 -> C(6,2)=15 tables with ~21-bit keys (guaranteed
     // recall, sub-quadratic buckets); radius 8 on 64-bit simhash needs 45
     // tables of ~12-bit keys — at that radius MinHash is the right tool
     // (see Dedup.simhashPairs scaladoc).
-    "dedup_simhash_pairs" -> ((s, dir) => {
+    Query("dedup_simhash_pairs", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.simhashPairs(docs, col("doc_id"), col("text"), maxHamming = 4,
           inputPartitions = s.sparkContext.defaultParallelism)
         .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))
-    }),
+    }, s"""
+      WITH toks AS (
+        SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+        FROM documents
+      ), th AS (
+        SELECT doc_id, ${fnv("tok")} AS h FROM toks
+      ), bits AS (
+        SELECT doc_id, b.b,
+               sum(CASE WHEN ((h >> b.b) & 1::UBIGINT) = 1::UBIGINT THEN 1 ELSE -1 END) AS acc
+        FROM th, (SELECT unnest(generate_series(0, 63)) AS b) b
+        GROUP BY doc_id, b.b
+      ), sigs AS (
+        SELECT doc_id,
+               sum(CASE WHEN acc > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS usig
+        FROM bits GROUP BY doc_id
+      ), s2 AS (
+        SELECT doc_id, ${signed("usig")}::BIGINT AS sig FROM sigs
+      )
+      SELECT a.doc_id AS a, b.doc_id AS b,
+             bit_count(xor(a.sig, b.sig))::BIGINT AS hamming
+      FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.sig, b.sig)) <= 4
+    """),
     // corpus vocabulary top-100 terms (count desc, term asc)
-    "text_topk_terms" -> ((s, dir) => {
+    Query("text_topk_terms", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       TextAnalysis.topKTerms(docs, col("text"), k = 100)
-    }),
+    }, """
+      WITH toks AS (
+        SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
+               t -> length(t) > 0)) AS term
+        FROM documents)
+      SELECT term, count(*)::BIGINT AS n FROM toks
+      GROUP BY term ORDER BY n DESC, term LIMIT 100
+    """),
     // intra-doc n-gram repetition stats (Gopher-style boilerplate signal)
-    "text_repetition" -> ((s, dir) => {
+    Query("text_repetition", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(col("doc_id"),
         TextAnalysis.repetitionStats(col("text")).as("r"))
         .select(col("doc_id"), col("r.n_grams").cast("long").as("n_grams"),
           col("r.n_distinct").cast("long").as("n_distinct"))
-    }),
+    }, s"""
+      WITH $Tokens, g AS (
+        SELECT doc_id,
+          CASE WHEN len(toks) >= 3
+            THEN list_transform(generate_series(1, len(toks) - 2),
+                 i -> array_to_string(list_slice(toks, i, i + 2), ' '))
+            ELSE [array_to_string(toks, ' ')] END AS grams
+        FROM t)
+      SELECT doc_id, len(grams)::BIGINT AS n_grams,
+             len(list_distinct(grams))::BIGINT AS n_distinct
+      FROM g
+    """),
     // benchmark decontamination: every 50th doc plays the eval set; flag
     // other docs sharing >= 5 distinct 3-grams with it
-    "text_contamination" -> ((s, dir) => {
+    Query("text_contamination", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.contaminationOverlap(
         docs.where(col("doc_id") % 50 =!= 0), col("doc_id"), col("text"),
         docs.where(col("doc_id") % 50 === 0), col("text"),
         n = 3, minOverlap = 5)
         .select(col("id").as("doc_id"), col("n_overlap"))
-    }),
-    // winnowing fingerprint size per doc. Oracle-checked: grams use the
-    // FNV-1a hash (graft.expr.Fnv64), so DuckDB recomputes the full
-    // pipeline — order-preserving distinct grams, signed-min window minima,
-    // distinct count — in plain SQL
+    }, s"""
+      WITH $Shingles3, bg AS (
+        SELECT DISTINCT unnest(sh) AS g FROM shq WHERE doc_id % 50 = 0
+      ), dg AS (
+        SELECT doc_id, unnest(sh) AS g FROM shq WHERE doc_id % 50 <> 0
+      )
+      SELECT doc_id, count(*)::BIGINT AS n_overlap
+      FROM dg JOIN bg USING (g)
+      GROUP BY doc_id HAVING count(*) >= 5
+    """),
     // PII scrub pass over a deterministic PII-bearing construction (the
     // corpus text itself carries none): counts + redacted length, regexes
     // re-run verbatim by the oracle (Java-regex/RE2-common subset only)
-    "text_pii_redaction" -> ((s, dir) => {
+    Query("text_pii_redaction", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val t = concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
         lit("@example.com or call 555-"),
@@ -462,44 +922,89 @@ object SparkEntry {
         length(TextAnalysis.redactPii(t)).as("len_redacted"))
         .select(col("doc_id"), col("c.n_email"), col("c.n_ip"), col("c.n_phone"),
           col("len_redacted"))
-    }),
+    }, """
+      WITH p AS (
+        SELECT doc_id,
+               text || ' contact user' || doc_id::VARCHAR || '@example.com or call 555-' ||
+               lpad((doc_id % 10000)::VARCHAR, 4, '0') ||
+               ' from 10.0.' || (doc_id % 256)::VARCHAR || '.7' ||
+               CASE WHEN doc_id % 3 = 0 THEN ' alt 555-7777 or ops@example.net' ELSE '' END AS t
+        FROM documents)
+      SELECT doc_id,
+             len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::INT AS n_email,
+             len(regexp_extract_all(t, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))::INT AS n_ip,
+             len(regexp_extract_all(t, '\b[0-9]{3}-[0-9]{4}\b'))::INT AS n_phone,
+             length(regexp_replace(regexp_replace(regexp_replace(t,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+               '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
+               '\b[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g'))::INT AS len_redacted
+      FROM p
+    """),
     // deterministic hash sampling: the kept set is a pure function of the
     // key (stable across partitionings/cluster sizes — the reproducible
-    // 100 TB subset primitive); oracle recomputes the FNV-1a + pmod cut
-    "sample_hash_docs" -> ((s, dir) => {
+    // 100 TB subset primitive); oracle recomputes the FNV-1a of
+    // (doc_id || salt) and Spark's signed pmod 1e6 < 100000 cut
+    Query("sample_hash_docs", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       TextAnalysis.sampleByHash(docs, col("doc_id"), 0.1, salt = "r4")
         .select(col("doc_id"))
-    }),
+    }, s"""
+      WITH h AS (SELECT doc_id, ${fnv("doc_id::VARCHAR || 'r4'")}::HUGEINT AS u FROM documents)
+      SELECT doc_id FROM h WHERE ${signedPmod("u", 1000000L)} < 100000
+    """),
     // per-domain cap ("at most K docs per source"): bounded O(k) heap per
     // group via TopKAgg — combines map-side, so a hot domain never sorts in
     // one task; oracle is the row_number formulation the operator avoids
-    "sample_domain_cap" -> ((s, dir) => {
+    Query("sample_domain_cap", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("source").isNotNull)
       ops.Sampling.capPerGroup(docs, col("source"), col("doc_id"), 20)
         .select(col("g").as("source"), col("id").as("doc_id"))
-    }),
+    }, """
+      SELECT source, doc_id FROM (
+        SELECT source, doc_id,
+               row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        FROM documents WHERE source IS NOT NULL)
+      WHERE rn <= 20
+    """),
     // stratified deterministic sampling: per-language rates over the same
     // FNV keep-function as sample_hash_docs (subsets nest across rates)
-    "sample_stratified" -> ((s, dir) => {
+    Query("sample_stratified", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       ops.Sampling.stratifiedSampleByHash(docs, col("doc_id"), col("lang"),
         Map("en" -> 0.5, "zh" -> 0.25), defaultRate = 0.1, salt = "r5")
         .select(col("doc_id"), col("lang"))
-    }),
+    }, s"""
+      WITH h AS (SELECT doc_id, lang, ${fnv("doc_id::VARCHAR || 'r5'")}::HUGEINT AS u FROM documents)
+      SELECT doc_id, lang FROM h
+      WHERE ${signedPmod("u", 1000000L)} <
+        CASE lang WHEN 'en' THEN 500000 WHEN 'zh' THEN 250000 ELSE 100000 END
+    """),
     // integer-exact tf-idf surrogate: top-3 terms per doc by
     // (tf DESC, df ASC, term ASC) — corpus-weighted two-pass op with one
     // reused term-hashed exchange
-    "text_distinctive_terms" -> ((s, dir) => {
+    Query("text_distinctive_terms", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
       TextAnalysis.distinctiveTerms(docs, col("doc_id"), col("text"), k = 3)
-    }),
+    }, """
+      WITH toks AS (
+        SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
+               t -> length(t) > 0)) AS term
+        FROM documents WHERE text IS NOT NULL),
+      tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM toks GROUP BY 1, 2),
+      dfc AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1)
+      SELECT doc_id, term, tf, df, rank FROM (
+        SELECT tf.doc_id, tf.term, tf.tf, dfc.df,
+               row_number() OVER (PARTITION BY tf.doc_id
+                 ORDER BY tf.tf DESC, dfc.df ASC, tf.term ASC)::BIGINT AS rank
+        FROM tf JOIN dfc USING (term))
+      WHERE rank <= 3
+    """),
     // GPT-style sequence packing: concat docs per FNV bucket in id order,
     // split every 512 tokens; pure prefix-sum arithmetic, replayed exactly
     // by the oracle's windowed cumulative sum
-    "pack_sequences" -> ((s, dir) => {
+    Query("pack_sequences", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
         .select(col("doc_id"),
@@ -508,13 +1013,30 @@ object SparkEntry {
           capacity = 512, buckets = 8)
         .select(col("id").as("doc_id"), col("n_tokens"), col("bucket"),
           col("chunk_first"), col("chunk_last"), col("chunk_offset"))
-    }),
+    }, s"""
+      WITH t AS (
+        SELECT doc_id,
+          (CASE WHEN length(trim(text)) = 0 THEN 0
+                ELSE len(string_split_regex(trim(text), '\\s+')) END)::BIGINT AS n_tokens,
+          (${signedPmod(s"${fnv("doc_id::VARCHAR")}::HUGEINT", 8L)})::BIGINT AS bucket
+        FROM documents WHERE text IS NOT NULL),
+      c AS (
+        SELECT doc_id, n_tokens, bucket,
+          coalesce(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum
+        FROM t)
+      SELECT doc_id, n_tokens, bucket,
+             (cum // 512)::BIGINT AS chunk_first,
+             (greatest(cum, cum + n_tokens - 1) // 512)::BIGINT AS chunk_last,
+             (cum % 512)::BIGINT AS chunk_offset
+      FROM c
+    """),
     // per-label embedding centroids via the VectorAvgAgg used by IVF's
     // k-means (bounded dims-sized buffer, map-side combine — never
     // posexplode+groupBy(label, dim), which would shuffle N x dims rows).
     // The oracle replays the aggregate's FLOAT truncation (::REAL) before
     // rounding so both engines quantize identically.
-    "embed_label_centroids" -> ((s, dir) => {
+    Query("embed_label_centroids", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
         .where(col("embedding").isNotNull)
       emb.groupBy(col("label"))
@@ -524,52 +1046,113 @@ object SparkEntry {
         .select(col("label").cast("long").as("label"), col("n"),
           (col("dim") + 1).cast("long").as("dim"),
           round(col("v").cast("double"), 6).as("v"))
-    }),
-    "text_fingerprints" -> ((s, dir) => {
+    }, """
+      SELECT label::BIGINT AS label, count(*)::BIGINT AS n, i::BIGINT AS dim,
+             round(((sum(embedding[i]::DOUBLE) / count(*))::REAL)::DOUBLE, 6) AS v
+      FROM embeddings, generate_series(1, 64) AS t(i)
+      WHERE embedding IS NOT NULL
+      GROUP BY label, i
+    """),
+    // winnowing fingerprint size per doc. Oracle-checked: grams use the
+    // FNV-1a hash (graft.expr.Fnv64), so DuckDB recomputes the full
+    // pipeline — order-preserving distinct grams (Spark array_distinct keeps
+    // the first occurrence), SIGNED window minima, distinct count
+    Query("text_fingerprints", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(col("doc_id"),
         size(TextAnalysis.fingerprint(col("text"))).cast("long").as("n_grams"))
-    }),
+    }, s"""
+      WITH $Tokens, g0 AS (
+        SELECT doc_id,
+          CASE WHEN len(toks) >= 5
+            THEN list_transform(generate_series(1, len(toks) - 4),
+                 i -> array_to_string(list_slice(toks, i, i + 4), ' '))
+            ELSE [array_to_string(toks, ' ')] END AS raw
+        FROM t
+      ), g AS (
+        SELECT doc_id,
+          list_transform(
+            list_filter(generate_series(1, len(raw)), i -> list_position(raw, raw[i]) = i),
+            i -> raw[i]) AS grams
+        FROM g0
+      ), h AS (
+        SELECT doc_id,
+          list_transform(list_transform(grams, gram -> ${fnv("gram")}::HUGEINT),
+            fh -> ${signed("fh")}::BIGINT) AS hs
+        FROM g
+      ), m AS (
+        SELECT doc_id,
+          CASE WHEN len(hs) >= 4
+            THEN list_transform(generate_series(1, len(hs) - 3), i -> list_min(list_slice(hs, i, i + 3)))
+            ELSE [list_min(hs)] END AS mins
+        FROM h
+      )
+      SELECT doc_id, len(list_distinct(mins))::BIGINT AS n_grams FROM m
+    """),
     // multimodal: REAL byte-level decode (pure-JVM codecs, no stubs) over a
     // deterministic synthetic media catalog keyed by documents.doc_id. The
     // oracle recomputes the decoded features from the closed-form generative
-    // formulas — so the engine's WAV/BMP/frame-container decode must be
-    // byte-exact (chunk walk, row padding, bottom-up rows, frame seeking).
-    "mm_audio_features" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id").as[java.lang.Long]
-      ops.Multimodal.audioFeatures(ops.Multimodal.syntheticCatalog(ids))
-    }),
-    "mm_image_features" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id").as[java.lang.Long]
-      ops.Multimodal.imageFeatures(ops.Multimodal.syntheticCatalog(ids))
+    // formulas (documented in ops/Multimodal.scala) — so the engine's
+    // WAV/BMP/frame-container decode must be byte-exact (chunk walk, row
+    // padding, bottom-up rows, frame seeking).
+    Query("mm_audio_features", (s, dir) => ops.Multimodal.audioFeatures(mediaCatalog(s, dir)), """
+      WITH d AS (SELECT doc_id, 800 + (doc_id % 7) * 160 AS n
+                 FROM documents WHERE doc_id % 3 = 1),
+           s AS (SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i FROM d)
+      SELECT doc_id, 8000::BIGINT AS sample_rate, n::BIGINT AS n_samples,
+             (n // 8)::BIGINT AS duration_ms,
+             sum(abs((doc_id * 1000003 + i * 7919) % 65536 - 32768))::BIGINT AS abs_sum,
+             max(abs((doc_id * 1000003 + i * 7919) % 65536 - 32768))::BIGINT AS peak
+      FROM s GROUP BY doc_id, n
+    """),
+    Query("mm_image_features", (s, dir) => {
+      ops.Multimodal.imageFeatures(mediaCatalog(s, dir))
         .select(col("doc_id"), col("width"), col("height"), col("lum_sum"))
-    }),
+    }, """
+      WITH d AS (SELECT doc_id, 13 + (doc_id % 5) AS w, 7 + ((doc_id // 3) % 4) AS h
+                 FROM documents WHERE doc_id % 3 = 0),
+           px AS (SELECT doc_id, w, h, unnest(generate_series(0, w * h - 1)) AS p FROM d),
+           l AS (SELECT doc_id, w, h,
+                   (299 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31) % 256)
+                  + 587 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31 + 7) % 256)
+                  + 114 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31 + 14) % 256)) // 1000 AS lum
+                 FROM px)
+      SELECT doc_id, w::BIGINT AS width, h::BIGINT AS height, sum(lum)::BIGINT AS lum_sum
+      FROM l GROUP BY doc_id, w, h
+    """),
     // video frame sampling: every 2nd frame is seeked to via the container's
     // length prefixes (others never decoded), then BMP-decoded per frame
-    "mm_frame_sample" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id").as[java.lang.Long]
-      ops.Multimodal.videoFrameFeatures(ops.Multimodal.syntheticCatalog(ids), everyNth = 2)
-    }),
-    // canonical record serialization (reference model_dump parity, A13)
-    "marc_json_dump" -> ((s, _) => {
+    Query("mm_frame_sample",
+      (s, dir) => ops.Multimodal.videoFrameFeatures(mediaCatalog(s, dir), everyNth = 2), """
+      WITH d AS (SELECT doc_id, 3 + (doc_id % 4) AS nf
+                 FROM documents WHERE doc_id % 3 = 2),
+           f AS (SELECT doc_id, unnest(generate_series(0, nf - 1, 2)) AS fi FROM d),
+           px AS (SELECT doc_id, fi, unnest(generate_series(0, 47)) AS p FROM f),
+           l AS (SELECT doc_id, fi,
+                   (299 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31) % 256)
+                  + 587 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31 + 7) % 256)
+                  + 114 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31 + 14) % 256)) // 1000 AS lum
+                 FROM px)
+      SELECT doc_id, fi::BIGINT AS frame_idx, (fi * 500)::BIGINT AS ts_ms,
+             sum(lum)::BIGINT AS lum_sum
+      FROM l GROUP BY doc_id, fi
+    """),
+    // canonical record serialization (reference model_dump parity, A13);
+    // the oracle literal is the reference's actual model_dump json on this
+    // record
+    Query("marc_json_dump", (s, _) => {
       import s.implicits._
       val df = Seq(graft.gen.Fixtures.validDoc).toDF()
       df.select($"doc_id", graft.expr.MarcJson.column($"spans").as("dump"))
-    }),
-    // stats with HLL++ distinct sketches (rows-only: approximate by design;
-    // exactness of the non-sketch fields is covered by col_stats_documents)
-    // The HLL++ estimates themselves are approximate (no exact oracle), so
-    // the oracle-checkable surface is: exact distincts (recomputed exactly
-    // here AND in DuckDB) plus an in-bounds FLAG per sketch — rsd=0.01, flag
-    // asserts |est - exact| <= 5% * exact (5 sigma; deterministic per
-    // dataset, HLL++ has no run-to-run randomness).
-    "col_stats_sketch" -> ((s, dir) => {
+    }, s"SELECT 'on1381158740' AS doc_id, ${sqlStr(graft.expr.MarcJson.serialize(Fixtures.validDoc.spans))} AS dump"),
+    // stats with HLL++ distinct sketches. The HLL++ estimates themselves
+    // are approximate (no exact oracle), so the oracle-checkable surface is:
+    // exact distincts (recomputed exactly here AND in DuckDB) plus an
+    // in-bounds FLAG per sketch — rsd=0.01, flag asserts |est - exact| <=
+    // 5% * exact (5 sigma; deterministic per dataset, HLL++ has no
+    // run-to-run randomness). The oracle pins the flags at 1, so a drifting
+    // sketch breaks the hash.
+    Query("col_stats_sketch", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.agg(
         StatsAgg.columnStats(col("text")).as("st"),
@@ -583,16 +1166,25 @@ object SparkEntry {
             lit(0.05) * col("distinct_text")).cast("int").as("text_est_ok"),
           (abs(col("est_source") - col("distinct_source")) <=
             lit(0.05) * col("distinct_source")).cast("int").as("source_est_ok"))
-    }),
+    }, """
+      SELECT count(*)::BIGINT AS n_rows,
+             (count(*) - count(text))::BIGINT AS n_nulls,
+             count(DISTINCT text)::BIGINT AS distinct_text,
+             count(DISTINCT source)::BIGINT AS distinct_source,
+             1::INT AS text_est_ok, 1::INT AS source_est_ok
+      FROM documents
+    """),
     // Quantile sketch bound-check (the percentile face of the
     // col_stats_sketch pattern): percentile_approx (Greenwald-Khanna,
     // mergeable, one pass at corpus scale) self-audited by a rank check —
     // the fraction of rows at or below the reported quantile must sit
     // within the sketch's rank-error guarantee (1/accuracy) plus the
     // discreteness step (ties collapse many ranks onto one value; bound by
-    // the largest tie group). The oracle recomputes n_rows exactly and
-    // pins every flag at 1.
-    "col_stats_quantiles" -> ((s, dir) => {
+    // the largest tie group). The oracle recomputes n_rows and the exact
+    // discrete quantiles by the shared INTEGER rank definition (smallest v
+    // with cumulative count >= (n*p + 99) // 100 — no FP ceil on either
+    // engine) and pins every flag at 1.
+    Query("col_stats_quantiles", (s, dir) => {
       val ps = Seq(50, 90, 99)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val lens = docs.where(col("text").isNotNull)
@@ -610,7 +1202,7 @@ object SparkEntry {
       // ride the SAME final aggregation pass (percentilesWithCuts), so the
       // flag computation below is pure driver arithmetic on the collected
       // one-row result instead of a second full scan of the value column
-      // (r6; flags are the identical double comparisons the scan computed).
+      // (flags are the identical double comparisons the scan computed).
       val ex = checks.ExactQuantile.percentilesWithCuts(lens, col("v"), ps, qs)
         .collect().head
       val nRows = ex.getLong(0)
@@ -630,15 +1222,27 @@ object SparkEntry {
             .as(s"p${p}_ok")
         }
       s.range(1).select(outCols: _*)
-    }),
+    }, """
+      WITH l AS (SELECT length(text)::BIGINT AS v FROM documents WHERE text IS NOT NULL),
+           nn AS (SELECT count(*) AS n FROM l),
+           cc AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum
+                  FROM (SELECT v, count(*) AS c FROM l GROUP BY v))
+      SELECT (SELECT n FROM nn)::BIGINT AS n_rows,
+             (SELECT min(v) FROM cc, nn WHERE cum >= (n * 50 + 99) // 100) AS exact_p50,
+             (SELECT min(v) FROM cc, nn WHERE cum >= (n * 90 + 99) // 100) AS exact_p90,
+             (SELECT min(v) FROM cc, nn WHERE cum >= (n * 99 + 99) // 100) AS exact_p99,
+             1::INT AS p50_ok, 1::INT AS p90_ok, 1::INT AS p99_ok
+    """),
     // cross-run mergeable distinct sketch (the ledger resume path): KMV
     // sketches of two disjoint halves of the corpus — standing in for two
     // runs' persisted per-batch buffers — MERGED into one corpus sketch.
     // KMV keeps the k smallest distinct FNV-1a hashes in SIGNED order, so
-    // the oracle recomputes the k-th kept hash EXACTLY in SQL (the sketch's
-    // entire content boundary), plus the exact distinct count and an
-    // estimate-in-bounds flag (k=64 -> ~12.5% std err; deterministic here).
-    "col_stats_merged" -> ((s, dir) => {
+    // the oracle recomputes the k-th kept hash EXACTLY in SQL (FNV-1a + the
+    // splitmix64 finalizer: adds/xors/logical shifts/multiplies mod 2^64 on
+    // UBIGINT) — the sketch's entire content boundary — plus the exact
+    // distinct count and an estimate-in-bounds flag (k=64 -> ~12.5% std
+    // err; deterministic here).
+    Query("col_stats_merged", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(col("text").isNotNull)
       val halves = docs
@@ -654,24 +1258,41 @@ object SparkEntry {
         col("d.kth_hash").as("kth_hash"),
         (abs(col("d.estimate") - col("n_distinct_text")) <=
           lit(0.25) * col("n_distinct_text")).cast("int").as("est_ok"))
-    }),
+    }, s"""
+      WITH d AS (SELECT DISTINCT text FROM documents WHERE text IS NOT NULL),
+      f AS (SELECT ${fnv("text")} AS h FROM d),
+      m1 AS (SELECT ((h::HUGEINT + 11400714819323198485) % 18446744073709551616)::UBIGINT AS z FROM f),
+      m2 AS (SELECT ((((xor(z, z >> 30))::HUGEINT % 4294967296) * 13787848793156543929
+                     + ((((xor(z, z >> 30))::HUGEINT // 4294967296) * 13787848793156543929) % 4294967296) * 4294967296)
+                    % 18446744073709551616)::UBIGINT AS z FROM m1),
+      m3 AS (SELECT ((((xor(z, z >> 27))::HUGEINT % 4294967296) * 10723151780598845931
+                     + ((((xor(z, z >> 27))::HUGEINT // 4294967296) * 10723151780598845931) % 4294967296) * 4294967296)
+                    % 18446744073709551616)::UBIGINT AS z FROM m2),
+      hh AS (SELECT DISTINCT xor(z, z >> 31)::HUGEINT AS u FROM m3),
+      sh AS (SELECT ${signed("u")}::BIGINT AS h FROM hh),
+      ranked AS (SELECT h FROM sh ORDER BY h LIMIT 64)
+      SELECT (SELECT count(*) FROM d)::BIGINT AS n_distinct_text,
+             (SELECT count(*) FROM ranked)::BIGINT AS n_kept,
+             (SELECT max(h) FROM ranked)::BIGINT AS kth_hash,
+             1::INT AS est_ok
+    """),
     // batch-query ANN, brute-force exact: a TABLE of queries (every 100th
     // embedding) against the corpus in ONE job — broadcast queries, map-side
     // scoring, bounded TopKAgg per query (the shuffle carries <= k rows per
     // task per query). Oracle: per-query brute force in DuckDB.
-    "ann_batch_topk" -> ((s, dir) => {
+    Query("ann_batch_topk", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val q = emb.where(col("vec_id") % 100 === 0)
       Similarity.topKCosineBatch(emb, col("vec_id"), col("embedding"),
           q, col("vec_id"), col("embedding"), k = 10)
         .select(col("qid"), col("rank"), col("id").as("vec_id"))
-    }),
+    }, AnnBatchOracle),
     // batch-query ANN through the IVF index machinery: per-query ranked
     // probe clusters fan out map-only, the (cluster, query) rows broadcast
     // against the inverted lists, grouped bounded top-k. Full probe
     // (nProbe = k) is exact by construction — the same brute-force oracle
     // pins train/assign/probe/rank end-to-end for the BATCH path.
-    "ann_batch_ivf" -> ((s, dir) => {
+    Query("ann_batch_ivf", (s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val q = emb.where(col("vec_id") % 100 === 0)
       val model = ops.Ivf.train(emb, col("vec_id"), col("embedding"), k = 16, iters = 2)
@@ -679,23 +1300,47 @@ object SparkEntry {
       ops.Ivf.searchBatch(index, model, q, col("vec_id"), col("embedding"),
           topK = 10, nProbe = 16)
         .select(col("qid"), col("rank"), col("id").as("vec_id"))
-    }),
+    }, AnnBatchOracle),
     // per-user sessionization via native session_window (merged [ts,
     // ts+gap) intervals — no per-key ordered window frame); the oracle
-    // replays it as the classic gaps-and-islands lag/cumsum
-    "events_sessions" -> ((s, dir) => {
+    // replays it as the classic gaps-and-islands lag/cumsum, breaking only
+    // when the gap to the previous event EXCEEDS 30 min (boundary-inclusive
+    // merge — an event exactly 30 min later still merges, pinned by OpsSpec)
+    Query("events_sessions", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
         .where(col("user_id").isNotNull)
       ops.Sessions.sessionSummaries(ev, col("user_id"), col("ts"), "30 minutes")
         .select(col("key").as("user_id"), col("session_start"),
           col("session_end"), col("n_events"))
-    }),
+    }, """
+      WITH e AS (
+        SELECT user_id, ts FROM events
+        WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+      d AS (
+        SELECT user_id, ts,
+               CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                      OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                           > INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS brk
+        FROM e),
+      s AS (
+        SELECT user_id, ts,
+               sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+                 ROWS UNBOUNDED PRECEDING) AS sid
+        FROM d)
+      SELECT user_id, min(ts) AS session_start,
+             max(ts) + INTERVAL 30 MINUTE AS session_end,
+             count(*)::BIGINT AS n_events
+      FROM s GROUP BY user_id, sid
+    """),
     // snapshot diff vs a deterministically-derived "next" snapshot: every
     // 97th doc removed, every 31st doc's text edited, every 101st doc
     // re-added under a shifted id — only added/changed rows would need
-    // revalidation. Fingerprint = xxhash64? no: fnv64(text) so the change
-    // detection itself is oracle-replayable end to end
-    "snapshot_diff_docs" -> ((s, dir) => {
+    // revalidation. The fingerprint is fnv64(text), so the change detection
+    // itself is oracle-replayable; the oracle replays the derived snapshot
+    // and the diff with a text compare (equivalent to the fnv64 digest
+    // compare, collision-free on this corpus).
+    Query("snapshot_diff_docs", (s, dir) => {
       val a = s.read.parquet(s"$dir/documents.parquet")
       val b = a.where(pmod(col("doc_id"), lit(97)) =!= 0)
         .select(col("doc_id"),
@@ -706,899 +1351,31 @@ object SparkEntry {
       checks.SnapshotDiff.diff(a, b, col("doc_id"),
           graft.expr.SketchExprs.fnv64(coalesce(col("text"), lit(""))))
         .groupBy(col("status")).agg(count(lit(1)).as("n"))
-    }),
+    }, """
+      WITH a AS (SELECT doc_id, text FROM documents),
+      b AS (
+        SELECT doc_id,
+               CASE WHEN doc_id % 31 = 0 THEN text || ' EDITED' ELSE text END AS text
+        FROM documents WHERE doc_id % 97 != 0
+        UNION ALL
+        SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 101 = 0),
+      j AS (
+        SELECT CASE WHEN a.doc_id IS NULL THEN 'added'
+                    WHEN b.doc_id IS NULL THEN 'removed'
+                    WHEN coalesce(a.text, '') != coalesce(b.text, '') THEN 'changed'
+                    ELSE 'unchanged' END AS status
+        FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
+      SELECT status, count(*)::BIGINT AS n FROM j
+      WHERE status != 'unchanged' GROUP BY status
+    """),
     // tumbling-hour event counts (batch form of the streaming windowed agg)
-    "events_hourly" -> ((s, dir) => {
+    Query("events_hourly", (s, dir) => {
       val ev = s.read.parquet(s"$dir/events.parquet")
       ev.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("w.start").as("hour_ts"), col("event_type"), col("n"))
-    }))
-
-  /** DuckDB-equivalent SQL per query (same column names — the driver's
-    * compare sorts columns by name before hashing).
-    */
-  def oracleSql: Map[String, String] = {
-    val fixtureRows = Fixtures.expectedInvalid
-      .map { case (rid, loc, msg) =>
-        val esc = msg.replace("'", "''")
-        s"('1234567890', '$rid', '${loc.replace("'", "''")}', '$esc')"
-      }
-      .mkString(", ")
-    val overrideRows = Fixtures.expectedInvalid
-      .filterNot(_._1 == "control_field_length_invalid")
-      .map { case (rid, loc, msg) =>
-        s"('1234567890', '$rid', '${loc.replace("'", "''")}', '${msg.replace("'", "''")}')"
-      }
-      .mkString(", ")
-    val errorsJson = graft.expr.MarcErrors.json(
-      graft.expr.MarcValidator.validate(Fixtures.invalidDoc.spans, graft.rules.RuleSet.default))
-    // DuckDB FNV-1a 64 over a string expression (unsigned HUGEINT modular
-    // multiply), and Spark's signed pmod over it — the shared keep-function
-    // fragments for every hash-sampling/bucketing oracle
-    def fnvU(e: String): String =
-      s"""list_reduce(
-         |              list_prepend(14695981039346656037::UBIGINT,
-         |                list_transform(generate_series(1, length($e)),
-         |                  i -> ascii(substr($e, i, 1))::UBIGINT)),
-         |              (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)::HUGEINT""".stripMargin
-    def signedPmod(u: String, m: Long): String =
-      s"((CASE WHEN $u >= 9223372036854775808::HUGEINT THEN $u - 18446744073709551616::HUGEINT ELSE $u END) % $m + $m) % $m"
-    Map(
-      "marc_fixture_violations" ->
-        s"SELECT * FROM (VALUES $fixtureRows) AS t(doc_id, rule_id, loc_path, msg)",
-      "marc_decode" ->
-        s"SELECT * FROM (VALUES $fixtureRows) AS t(doc_id, rule_id, loc_path, msg)",
-      "marc_override_flip" ->
-        s"SELECT * FROM (VALUES $overrideRows) AS t(doc_id, rule_id, loc_path, msg)",
-      "marc_errors_json" ->
-        s"SELECT '1234567890' AS doc_id, '${errorsJson.replace("'", "''")}' AS errors_json",
-      "marc_corpus_verdicts" -> """
-        SELECT 'non_repeatable_field' AS rule_id, count(*) AS n FROM documents WHERE doc_id % 9 = 1
-        UNION ALL SELECT 'missing_required_field', count(*) FROM documents WHERE doc_id % 9 = 2
-        UNION ALL SELECT 'multiple_1xx_fields', count(*) FROM documents WHERE doc_id % 9 = 3
-        UNION ALL SELECT 'control_field_length_invalid', count(*) FROM documents WHERE doc_id % 9 = 4
-        UNION ALL SELECT 'invalid_indicator', 2 * count(*) FROM documents WHERE doc_id % 9 = 5
-        UNION ALL SELECT 'subfield_not_allowed', count(*) FROM documents WHERE doc_id % 9 = 6
-        UNION ALL SELECT 'non_repeatable_subfield', count(*) FROM documents WHERE doc_id % 9 = 7
-        UNION ALL SELECT 'string_pattern_mismatch', count(*) FROM documents WHERE doc_id % 9 = 8
-      """.trim,
-      "marc_corpus_passed" -> ("SELECT count(*) FILTER (WHERE doc_id % 9 = 0) AS n_passed, "
-        + "count(*) FILTER (WHERE doc_id % 9 <> 0) AS n_failed, count(*) AS n_docs FROM documents"),
-      // every Synth doc carries >= 3 spans (LDR + 008 + media at minimum),
-      // so every reversed doc breaks order and every stripped doc breaks
-      // media pairing — counts are exactly the divisibility classes
-      "span_invariant_check" -> """
-        SELECT count(*)::BIGINT AS n_docs,
-               count(*) FILTER (WHERE doc_id % 7 = 0)::BIGINT AS n_order_bad,
-               count(*) FILTER (WHERE doc_id % 11 = 0)::BIGINT AS n_media_bad
-        FROM documents
-      """.trim,
-      "unique_dup_orderkeys" -> """
-        SELECT count(*)::BIGINT AS n_dup_keys, coalesce(sum(n - 1), 0)::BIGINT AS n_surplus_rows
-        FROM (SELECT count(*) AS n FROM lineitem GROUP BY l_orderkey HAVING count(*) > 1)
-      """.trim,
-      "referential_dangling" -> """
-        SELECT 'lineitem_part' AS check, count(*) FILTER (WHERE p.p_partkey IS NULL)::BIGINT AS n
-        FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-        UNION ALL
-        SELECT 'events_customer', count(*) FILTER (WHERE c.c_custkey IS NULL)::BIGINT
-        FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        UNION ALL
-        SELECT 'unreferenced_parts', count(*)::BIGINT
-        FROM part p WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-      """.trim,
-      "col_stats_documents" -> """
-        SELECT 'text' AS col_name, count(*)::BIGINT AS n_rows,
-               (count(*) - count(text))::BIGINT AS n_nulls, min(text) AS min_s, max(text) AS max_s
-        FROM documents
-        UNION ALL SELECT 'lang', count(*)::BIGINT, (count(*) - count(lang))::BIGINT, min(lang), max(lang) FROM documents
-        UNION ALL SELECT 'source', count(*)::BIGINT, (count(*) - count(source))::BIGINT, min(source), max(source) FROM documents
-      """.trim,
-      // the sketch flags are 1 iff Spark's HLL++ estimate landed within 5%
-      // of the exact distinct count — the oracle recomputes the exact counts
-      // and pins the flags at 1, so a drifting sketch breaks the hash
-      "col_stats_sketch" -> """
-        SELECT count(*)::BIGINT AS n_rows,
-               (count(*) - count(text))::BIGINT AS n_nulls,
-               count(DISTINCT text)::BIGINT AS distinct_text,
-               count(DISTINCT source)::BIGINT AS distinct_source,
-               1::INT AS text_est_ok, 1::INT AS source_est_ok
-        FROM documents
-      """.trim,
-      // exact discrete quantiles by the shared INTEGER rank definition
-      // (smallest v with cumulative count >= (n*p + 99) // 100 — no FP ceil
-      // on either engine); the *_ok flags are Spark's self-audit of
-      // percentile_approx against the GK rank guarantee, pinned at 1
-      "col_stats_quantiles" -> """
-        WITH l AS (SELECT length(text)::BIGINT AS v FROM documents WHERE text IS NOT NULL),
-             nn AS (SELECT count(*) AS n FROM l),
-             cc AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum
-                    FROM (SELECT v, count(*) AS c FROM l GROUP BY v))
-        SELECT (SELECT n FROM nn)::BIGINT AS n_rows,
-               (SELECT min(v) FROM cc, nn WHERE cum >= (n * 50 + 99) // 100) AS exact_p50,
-               (SELECT min(v) FROM cc, nn WHERE cum >= (n * 90 + 99) // 100) AS exact_p90,
-               (SELECT min(v) FROM cc, nn WHERE cum >= (n * 99 + 99) // 100) AS exact_p99,
-               1::INT AS p50_ok, 1::INT AS p90_ok, 1::INT AS p99_ok
-      """.trim,
-      // the KMV sketch's k smallest signed hashes are recomputed exactly in
-      // SQL: FNV-1a (HUGEINT modular multiply) + the splitmix64 finalizer
-      // (adds/xors/logical shifts/multiplies mod 2^64 on UBIGINT); kth_hash
-      // pins the merged sketch's content boundary, est_ok its estimate
-      "col_stats_merged" -> """
-        WITH d AS (SELECT DISTINCT text FROM documents WHERE text IS NOT NULL),
-        f AS (
-          SELECT list_reduce(
-            list_prepend(14695981039346656037::UBIGINT,
-              list_transform(generate_series(1, length(text)),
-                i -> ascii(substr(text, i, 1))::UBIGINT)),
-            (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT) AS h
-          FROM d),
-        m1 AS (SELECT ((h::HUGEINT + 11400714819323198485) % 18446744073709551616)::UBIGINT AS z FROM f),
-        m2 AS (SELECT ((((xor(z, z >> 30))::HUGEINT % 4294967296) * 13787848793156543929
-                       + ((((xor(z, z >> 30))::HUGEINT // 4294967296) * 13787848793156543929) % 4294967296) * 4294967296)
-                      % 18446744073709551616)::UBIGINT AS z FROM m1),
-        m3 AS (SELECT ((((xor(z, z >> 27))::HUGEINT % 4294967296) * 10723151780598845931
-                       + ((((xor(z, z >> 27))::HUGEINT // 4294967296) * 10723151780598845931) % 4294967296) * 4294967296)
-                      % 18446744073709551616)::UBIGINT AS z FROM m2),
-        hh AS (SELECT DISTINCT xor(z, z >> 31)::HUGEINT AS u FROM m3),
-        sh AS (SELECT (CASE WHEN u >= 9223372036854775808::HUGEINT
-                       THEN u - 18446744073709551616::HUGEINT ELSE u END)::BIGINT AS h FROM hh),
-        ranked AS (SELECT h FROM sh ORDER BY h LIMIT 64)
-        SELECT (SELECT count(*) FROM d)::BIGINT AS n_distinct_text,
-               (SELECT count(*) FROM ranked)::BIGINT AS n_kept,
-               (SELECT max(h) FROM ranked)::BIGINT AS kth_hash,
-               1::INT AS est_ok
-      """.trim,
-      // per-query brute force: both batch paths (broadcast brute-force and
-      // IVF full probe) must reproduce this exactly
-      "ann_batch_topk" -> """
-        WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
-             scored AS (
-          SELECT q.qid, e.vec_id, list_cosine_similarity(e.embedding, q.qe) AS sim
-          FROM embeddings e, q)
-        SELECT qid, rank, vec_id FROM (
-          SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-          FROM scored)
-        WHERE rank <= 10
-      """.trim,
-      "ann_batch_ivf" -> """
-        WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
-             scored AS (
-          SELECT q.qid, e.vec_id, list_cosine_similarity(e.embedding, q.qe) AS sim
-          FROM embeddings e, q)
-        SELECT qid, rank, vec_id FROM (
-          SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
-          FROM scored)
-        WHERE rank <= 10
-      """.trim,
-      "length_hist_documents" -> """
-        SELECT least(length(text) // 100, 63)::INT AS bucket, count(*)::BIGINT AS cnt
-        FROM documents WHERE text IS NOT NULL GROUP BY 1
-      """.trim,
-      "drift_psi_events" -> """
-        WITH cur AS (SELECT event_type AS cat, count(*) AS n_cur FROM events WHERE event_id % 2 = 0 GROUP BY 1),
-             base AS (SELECT event_type AS cat, count(*) AS n_base FROM events WHERE event_id % 2 = 1 GROUP BY 1),
-             j AS (SELECT coalesce(n_cur, 0) AS n_cur, coalesce(n_base, 0) AS n_base
-                   FROM cur FULL OUTER JOIN base USING (cat)),
-             pq AS (SELECT greatest(n_cur / (SELECT sum(n_cur) FROM j), 1e-6) AS p,
-                           greatest(n_base / (SELECT sum(n_base) FROM j), 1e-6) AS q FROM j)
-        SELECT round(sum((p - q) * ln(p / q)), 6) AS psi FROM pq
-      """.trim,
-      "drift_psi_hourly" -> """
-        WITH cur AS (SELECT date_trunc('hour', ts) AS h, event_type AS cat, count(*) AS n_cur
-                     FROM events GROUP BY 1, 2),
-             base AS (SELECT event_type AS cat, count(*) AS n_base FROM events GROUP BY 1),
-             frame AS (SELECT h, cat FROM (SELECT DISTINCT h FROM cur) CROSS JOIN base
-                       UNION SELECT h, cat FROM cur),
-             j AS (SELECT f.h, coalesce(c.n_cur, 0) AS n_cur, coalesce(b.n_base, 0) AS n_base
-                   FROM frame f
-                   LEFT JOIN cur c ON f.h = c.h AND f.cat = c.cat
-                   LEFT JOIN base b ON f.cat = b.cat),
-             pq AS (SELECT h,
-                      greatest(n_cur / sum(n_cur) OVER (PARTITION BY h), 1e-6) AS p,
-                      greatest(n_base / (SELECT sum(n_base) FROM base), 1e-6) AS q
-                    FROM j)
-        SELECT h AS hour_ts, round(sum((p - q) * ln(p / q)), 6) AS psi
-        FROM pq GROUP BY h
-      """.trim,
-      "drift_ks_events" -> """
-        WITH h AS (
-          SELECT least(greatest(floor(value / 5.0), 0), 99)::BIGINT AS bucket,
-                 count(*) FILTER (WHERE event_id % 2 = 0) AS n_cur,
-                 count(*) FILTER (WHERE event_id % 2 = 1) AS n_base
-          FROM events WHERE value IS NOT NULL GROUP BY 1),
-             c AS (
-          SELECT sum(n_cur) OVER (ORDER BY bucket) / (SELECT sum(n_cur) FROM h) AS cdf_cur,
-                 sum(n_base) OVER (ORDER BY bucket) / (SELECT sum(n_base) FROM h) AS cdf_base
-          FROM h)
-        SELECT round(max(abs(cdf_cur - cdf_base)), 6) AS ks FROM c
-      """.trim,
-      "drift_ks_auto" -> """
-        WITH r AS (SELECT min(value)::DOUBLE AS lo, max(value)::DOUBLE AS hi
-                   FROM events WHERE value IS NOT NULL),
-             h AS (
-          SELECT least(greatest(floor((value - r.lo) /
-                   ((CASE WHEN r.hi > r.lo THEN r.hi ELSE r.lo + 1.0 END - r.lo) / 100)), 0), 99)::BIGINT AS bucket,
-                 count(*) FILTER (WHERE event_id % 2 = 0) AS n_cur,
-                 count(*) FILTER (WHERE event_id % 2 = 1) AS n_base
-          FROM events, r WHERE value IS NOT NULL GROUP BY 1),
-             c AS (
-          SELECT sum(n_cur) OVER (ORDER BY bucket) / (SELECT sum(n_cur) FROM h) AS cdf_cur,
-                 sum(n_base) OVER (ORDER BY bucket) / (SELECT sum(n_base) FROM h) AS cdf_base
-          FROM h)
-        SELECT round(max(abs(cdf_cur - cdf_base)), 6) AS ks FROM c
-      """.trim,
-      // closed-form span-kind counts per defect class (Synth.doc layout)
-      "drift_kind_freq" -> """
-        SELECT kind, freq FROM (
-          SELECT 'LDR' AS kind, count(*)::BIGINT AS freq FROM documents
-          UNION ALL SELECT '001', (count(*) + count(*) FILTER (WHERE doc_id % 9 = 1))::BIGINT FROM documents
-          UNION ALL SELECT '006', (count(*) FILTER (WHERE doc_id % 9 = 4))::BIGINT FROM documents
-          UNION ALL SELECT '008', count(*)::BIGINT FROM documents
-          UNION ALL SELECT '010', (count(*) FILTER (WHERE doc_id % 9 = 7))::BIGINT FROM documents
-          UNION ALL SELECT '020', (count(*) FILTER (WHERE doc_id % 9 = 6))::BIGINT FROM documents
-          UNION ALL SELECT '100', (count(*) FILTER (WHERE doc_id % 9 = 3))::BIGINT FROM documents
-          UNION ALL SELECT '110', (count(*) FILTER (WHERE doc_id % 9 = 3))::BIGINT FROM documents
-          UNION ALL SELECT '050', count(*)::BIGINT FROM documents
-          UNION ALL SELECT '245', (count(*) FILTER (WHERE doc_id % 9 <> 2))::BIGINT FROM documents
-          UNION ALL SELECT '300', count(*)::BIGINT FROM documents
-          UNION ALL SELECT '336', (count(*) FILTER (WHERE doc_id % 9 = 5))::BIGINT FROM documents
-          UNION ALL SELECT '500', count(*)::BIGINT FROM documents
-          UNION ALL SELECT 'media', count(*)::BIGINT FROM documents
-          UNION ALL SELECT '910', count(*)::BIGINT FROM documents
-        ) WHERE freq > 0
-      """.trim,
-      "dedup_exact_docs" -> """
-        SELECT count(*)::BIGINT AS n_groups, (2 * count(*))::BIGINT AS n_rows_in_groups
-        FROM documents WHERE doc_id % 10 = 0
-      """.trim,
-      "dedup_lines" -> """
-        WITH src AS (
-          SELECT doc_id, '== shared boilerplate header ==' || chr(10) || text
-                 || chr(10) || '== shared footer ==' AS t
-          FROM documents
-        ), ls AS (
-          SELECT doc_id, string_split(t, chr(10)) AS parts FROM src
-        ), lines AS (
-          SELECT doc_id, unnest(generate_series(0, len(parts) - 1)) AS idx,
-                 unnest(parts) AS line
-          FROM ls
-        ), elig AS (
-          SELECT * FROM lines WHERE length(line) >= 10
-        ), keptE AS (
-          SELECT doc_id, idx, line FROM (
-            SELECT doc_id, idx, line,
-                   row_number() OVER (PARTITION BY line ORDER BY doc_id, idx) AS rn
-            FROM elig)
-          WHERE rn = 1
-        ), kept AS (
-          SELECT doc_id, idx, line FROM lines WHERE length(line) < 10
-          UNION ALL SELECT doc_id, idx, line FROM keptE
-        ), agg AS (
-          SELECT doc_id, count(*) AS n_kept,
-                 string_agg(line, chr(10) ORDER BY idx) AS text_clean
-          FROM kept GROUP BY doc_id
-        ), tot AS (
-          SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id
-        )
-        SELECT a.doc_id, n_kept::BIGINT AS n_kept,
-               (n_lines - n_kept)::BIGINT AS n_dropped, text_clean
-        FROM agg a JOIN tot USING (doc_id)
-      """.trim,
-      "dedup_near_pairs" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        )
-        SELECT a, b FROM cand
-        JOIN shq sa ON sa.doc_id = cand.a
-        JOIN shq sb ON sb.doc_id = cand.b
-        WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-      """.trim,
-      "dedup_clusters" -> """
-        WITH RECURSIVE t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        ), pairs AS (
-          SELECT a, b FROM cand
-          JOIN shq sa ON sa.doc_id = cand.a
-          JOIN shq sb ON sb.doc_id = cand.b
-          WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-                / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-        ), edges AS (
-          SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
-        ), cc AS (
-          SELECT DISTINCT x AS id, x AS label FROM edges
-          UNION
-          SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
-        )
-        SELECT id AS doc_id, min(label)::BIGINT AS cluster FROM cc GROUP BY id
-      """.trim,
-      // same recursive-CTE reachability as dedup_clusters, extended with the
-      // keep-one step: drop every cluster member except its minimum id
-      "dedup_keep_one" -> """
-        WITH RECURSIVE t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        ), pairs AS (
-          SELECT a, b FROM cand
-          JOIN shq sa ON sa.doc_id = cand.a
-          JOIN shq sb ON sb.doc_id = cand.b
-          WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-                / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-        ), edges AS (
-          SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
-        ), cc AS (
-          SELECT DISTINCT x AS id, x AS label FROM edges
-          UNION
-          SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
-        ), losers AS (
-          SELECT id FROM (SELECT id, min(label) AS cluster FROM cc GROUP BY id)
-          WHERE id <> cluster
-        )
-        SELECT d.doc_id, d.text FROM documents d
-        WHERE d.doc_id NOT IN (SELECT id FROM losers)
-      """.trim,
-      "dedup_ngram_pairs" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        )
-        SELECT a, b FROM cand
-        JOIN shq sa ON sa.doc_id = cand.a
-        JOIN shq sb ON sb.doc_id = cand.b
-        WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-      """.trim,
-      "dedup_embed_pairs" -> """
-        WITH planted AS (
-          SELECT vec_id + 1000000 AS vec_id,
-                 list_concat(embedding[1:60], [0.0, 0.0, 0.0, 0.0]::FLOAT[]) AS embedding
-          FROM embeddings WHERE vec_id % 25 = 0
-        ), allv AS (
-          SELECT vec_id, embedding FROM embeddings
-          UNION ALL SELECT vec_id, embedding FROM planted
-        )
-        SELECT l.vec_id AS a, r.vec_id AS b
-        FROM allv l JOIN allv r ON l.vec_id < r.vec_id
-        WHERE list_cosine_similarity(l.embedding, r.embedding) >= 0.75
-      """.trim,
-      "ann_topk" -> """
-        WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-             scored AS (
-          SELECT vec_id, list_cosine_similarity(e.embedding, q.embedding) AS sim
-          FROM embeddings e, q WHERE vec_id <> 0)
-        SELECT row_number() OVER (ORDER BY sim DESC, vec_id) AS rank, vec_id
-        FROM scored ORDER BY sim DESC, vec_id LIMIT 10
-      """.trim,
-      "ann_ivf_topk" -> """
-        WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-             scored AS (
-          SELECT vec_id, list_cosine_similarity(e.embedding, q.embedding) AS sim
-          FROM embeddings e, q WHERE vec_id <> 0)
-        SELECT row_number() OVER (ORDER BY sim DESC, vec_id) AS rank, vec_id
-        FROM scored ORDER BY sim DESC, vec_id LIMIT 10
-      """.trim,
-      // axis-model IVF: cluster = argmax(embedding[1..4]) with lowest-index
-      // tie-break (matches Ivf.clusterOf: cosine vs axis centroid e_j is
-      // embedding[j]/|v|, same argmax); probes = top-2 clusters by the
-      // query's own components (matches Model.rankClusters)
-      "ann_ivf_pruned" -> """
-        WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-             probes AS (
-               SELECT j - 1 AS cluster
-               FROM q, (SELECT unnest(generate_series(1, 4)) AS j) t
-               ORDER BY qe[j] DESC, j LIMIT 2),
-             assigned AS (
-               SELECT vec_id, embedding,
-                      CASE WHEN embedding[1] >= embedding[2] AND embedding[1] >= embedding[3]
-                                AND embedding[1] >= embedding[4] THEN 0
-                           WHEN embedding[2] >= embedding[3] AND embedding[2] >= embedding[4] THEN 1
-                           WHEN embedding[3] >= embedding[4] THEN 2
-                           ELSE 3 END AS cluster
-               FROM embeddings WHERE vec_id <> 0),
-             scored AS (
-               SELECT vec_id, list_cosine_similarity(a.embedding, q.qe) AS sim
-               FROM assigned a, q WHERE a.cluster IN (SELECT cluster FROM probes))
-        SELECT row_number() OVER (ORDER BY sim DESC, vec_id) AS rank, vec_id
-        FROM scored ORDER BY sim DESC, vec_id LIMIT 10
-      """.trim,
-      "text_token_counts" -> """
-        SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-               len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))::BIGINT AS n_subwords
-        FROM documents
-      """.trim,
-      // greedy longest-match wordpiece scan replayed as a recursive CTE:
-      // each (word, pos) state advances by the longest vocabulary piece
-      // matching at pos (else 1, the unknown-char fallback); the vocabulary
-      // literal is generated from WordpieceKernel.Vocab so both engines
-      // tokenize against the identical table
-      // words are extracted as ASCII-letter runs from the RAW text and
-      // lowercased per word (lower() on pure-ASCII is engine-identical) —
-      // lower(text) FIRST would apply DuckDB's Unicode case folding, which
-      // can map non-ASCII codepoints (U+212A, U+0130) into ASCII letters
-      // the kernel treats as separators
-      "text_subword_bpe" -> s"""
-        WITH RECURSIVE words AS (
-          SELECT doc_id, unnest(list_transform(
-            regexp_extract_all(text, '[a-zA-Z]+'), t -> lower(t))) AS w
-          FROM documents WHERE text IS NOT NULL),
-        steps AS (
-          SELECT doc_id, w, 0::INT AS pos, 0::INT AS n FROM words
-          UNION ALL
-          SELECT s.doc_id, s.w,
-                 (s.pos + coalesce(list_max(list_transform(
-                    list_filter(${graft.expr.WordpieceKernel.Vocab
-                      .map(t => s"'$t'").mkString("[", ",", "]")},
-                      t -> substr(s.w, s.pos + 1, length(t)) = t),
-                    t -> length(t))), 1))::INT,
-                 (s.n + 1)::INT
-          FROM steps s WHERE s.pos < length(s.w)),
-        perword AS (SELECT doc_id, n FROM steps WHERE pos >= length(w)),
-        perdoc AS (
-          SELECT doc_id, count(*)::BIGINT AS n_words, sum(n)::BIGINT AS n_pieces
-          FROM perword GROUP BY doc_id)
-        SELECT d.doc_id, coalesce(p.n_words, 0)::BIGINT AS n_words,
-               coalesce(p.n_pieces, 0)::BIGINT AS n_pieces
-        FROM (SELECT doc_id FROM documents WHERE text IS NOT NULL) d
-        LEFT JOIN perdoc p USING (doc_id)
-      """.trim,
-      "text_quality" -> s"""
-        WITH m AS (
-          SELECT doc_id, length(text) AS n_chars,
-                 len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-                 length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS n_punct,
-                 length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits,
-                 len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                     t -> list_contains(${TextAnalysis.StopwordsEn.map(w => s"'$w'").mkString("[", ", ", "]")}, t))) AS n_stopwords
-          FROM documents)
-        SELECT doc_id, n_chars::BIGINT AS n_chars, n_punct::BIGINT AS n_punct,
-               n_digits::BIGINT AS n_digits, n_stopwords::BIGINT AS n_stopwords,
-               (n_tokens BETWEEN 5 AND 100000 AND n_punct * 4 <= n_chars
-                AND n_digits * 4 <= n_chars) AS quality_pass
-        FROM m
-      """.trim,
-      // simhash: FNV-1a per token (modular HUGEINT multiply keeps 64-bit
-      // wraparound semantics), per-bit majority vote -> signed 64-bit sig,
-      // then ALL pairs at hamming <= 4. ascii() == UTF-8 byte here because
-      // the documents corpus is ASCII (verified: zero non-ASCII rows).
-      "dedup_simhash_pairs" -> """
-        WITH toks AS (
-          SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-          FROM documents
-        ), th AS (
-          SELECT doc_id, list_reduce(
-            list_prepend(14695981039346656037::UBIGINT,
-              list_transform(generate_series(1, length(tok)), i -> ascii(substr(tok, i, 1))::UBIGINT)),
-            (h, b) -> ((xor(h, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT) AS h
-          FROM toks
-        ), bits AS (
-          SELECT doc_id, b.b,
-                 sum(CASE WHEN ((h >> b.b) & 1::UBIGINT) = 1::UBIGINT THEN 1 ELSE -1 END) AS acc
-          FROM th, (SELECT unnest(generate_series(0, 63)) AS b) b
-          GROUP BY doc_id, b.b
-        ), sigs AS (
-          SELECT doc_id,
-                 sum(CASE WHEN acc > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS usig
-          FROM bits GROUP BY doc_id
-        ), s2 AS (
-          SELECT doc_id,
-                 (CASE WHEN usig >= 9223372036854775808::HUGEINT
-                       THEN usig - 18446744073709551616::HUGEINT ELSE usig END)::BIGINT AS sig
-          FROM sigs
-        )
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               bit_count(xor(a.sig, b.sig))::BIGINT AS hamming
-        FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.sig, b.sig)) <= 4
-      """.trim,
-      // winnowing fingerprints: FNV-1a gram hashes (same modular-multiply
-      // trick), order-preserving distinct (Spark array_distinct keeps first
-      // occurrence), SIGNED window minima, distinct count
-      "text_pii_redaction" -> """
-        WITH p AS (
-          SELECT doc_id,
-                 text || ' contact user' || doc_id::VARCHAR || '@example.com or call 555-' ||
-                 lpad((doc_id % 10000)::VARCHAR, 4, '0') ||
-                 ' from 10.0.' || (doc_id % 256)::VARCHAR || '.7' ||
-                 CASE WHEN doc_id % 3 = 0 THEN ' alt 555-7777 or ops@example.net' ELSE '' END AS t
-          FROM documents)
-        SELECT doc_id,
-               len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::INT AS n_email,
-               len(regexp_extract_all(t, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))::INT AS n_ip,
-               len(regexp_extract_all(t, '\b[0-9]{3}-[0-9]{4}\b'))::INT AS n_phone,
-               length(regexp_replace(regexp_replace(regexp_replace(t,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-                 '\b[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g'))::INT AS len_redacted
-        FROM p
-      """.trim,
-      // FNV-1a over (doc_id || salt), pmod 1e6 < 100000 — the HUGEINT
-      // modular-multiply recompute, signed like Spark's pmod
-      "sample_hash_docs" -> """
-        WITH h AS (
-          SELECT doc_id,
-            list_reduce(
-              list_prepend(14695981039346656037::UBIGINT,
-                list_transform(generate_series(1, length(doc_id::VARCHAR || 'r4')),
-                  i -> ascii(substr(doc_id::VARCHAR || 'r4', i, 1))::UBIGINT)),
-              (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)::HUGEINT AS u
-          FROM documents)
-        SELECT doc_id FROM h
-        WHERE ((CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT ELSE u END) % 1000000
-               + 1000000) % 1000000 < 100000
-      """.trim,
-      // the window formulation the engine-side bounded-heap operator avoids
-      "sample_domain_cap" -> """
-        SELECT source, doc_id FROM (
-          SELECT source, doc_id,
-                 row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-          FROM documents WHERE source IS NOT NULL)
-        WHERE rn <= 20
-      """.trim,
-      // per-language thresholds over the same FNV keep-function
-      "sample_stratified" -> s"""
-        WITH h AS (
-          SELECT doc_id, lang,
-            ${fnvU("doc_id::VARCHAR || 'r5'")} AS u
-          FROM documents)
-        SELECT doc_id, lang FROM h
-        WHERE ${signedPmod("u", 1000000L)} <
-          CASE lang WHEN 'en' THEN 500000 WHEN 'zh' THEN 250000 ELSE 100000 END
-      """.trim,
-      "text_distinctive_terms" -> """
-        WITH toks AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                 t -> length(t) > 0)) AS term
-          FROM documents WHERE text IS NOT NULL),
-        tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM toks GROUP BY 1, 2),
-        dfc AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1)
-        SELECT doc_id, term, tf, df, rank FROM (
-          SELECT tf.doc_id, tf.term, tf.tf, dfc.df,
-                 row_number() OVER (PARTITION BY tf.doc_id
-                   ORDER BY tf.tf DESC, dfc.df ASC, tf.term ASC)::BIGINT AS rank
-          FROM tf JOIN dfc USING (term))
-        WHERE rank <= 3
-      """.trim,
-      // windowed cumulative sum replays the prefix-sum chunk arithmetic
-      "pack_sequences" -> s"""
-        WITH t AS (
-          SELECT doc_id,
-            (CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split_regex(trim(text), '\\s+')) END)::BIGINT AS n_tokens,
-            (${signedPmod(fnvU("doc_id::VARCHAR"), 8L)})::BIGINT AS bucket
-          FROM documents WHERE text IS NOT NULL),
-        c AS (
-          SELECT doc_id, n_tokens, bucket,
-            coalesce(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum
-          FROM t)
-        SELECT doc_id, n_tokens, bucket,
-               (cum // 512)::BIGINT AS chunk_first,
-               (greatest(cum, cum + n_tokens - 1) // 512)::BIGINT AS chunk_last,
-               (cum % 512)::BIGINT AS chunk_offset
-        FROM c
-      """.trim,
-      // gaps-and-islands replay of session_window: break only when the gap
-      // to the previous event EXCEEDS 30 min (boundary-inclusive merge —
-      // an event exactly 30 min later still merges, pinned by OpsSpec)
-      "events_sessions" -> """
-        WITH e AS (
-          SELECT user_id, ts FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        d AS (
-          SELECT user_id, ts,
-                 CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                        OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                             > INTERVAL 30 MINUTE
-                      THEN 1 ELSE 0 END AS brk
-          FROM e),
-        s AS (
-          SELECT user_id, ts,
-                 sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS UNBOUNDED PRECEDING) AS sid
-          FROM d)
-        SELECT user_id, min(ts) AS session_start,
-               max(ts) + INTERVAL 30 MINUTE AS session_end,
-               count(*)::BIGINT AS n_events
-        FROM s GROUP BY user_id, sid
-      """.trim,
-      // the derived snapshot and the diff replayed with a text compare
-      // (equivalent to the engine's fnv64 digest compare, collision-free on
-      // this corpus)
-      "snapshot_diff_docs" -> """
-        WITH a AS (SELECT doc_id, text FROM documents),
-        b AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 31 = 0 THEN text || ' EDITED' ELSE text END AS text
-          FROM documents WHERE doc_id % 97 != 0
-          UNION ALL
-          SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 101 = 0),
-        j AS (
-          SELECT CASE WHEN a.doc_id IS NULL THEN 'added'
-                      WHEN b.doc_id IS NULL THEN 'removed'
-                      WHEN coalesce(a.text, '') != coalesce(b.text, '') THEN 'changed'
-                      ELSE 'unchanged' END AS status
-          FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-        SELECT status, count(*)::BIGINT AS n FROM j
-        WHERE status != 'unchanged' GROUP BY status
-      """.trim,
-      // first-occurrence keeps via a min(i) window per (doc, line); short
-      // lines always keep (same minLen contract as the global lineDedup)
-      "dedup_lines_intra" -> """
-        WITH l AS (
-          SELECT doc_id, unnest(string_split(text, chr(10))) AS line,
-                 generate_subscripts(string_split(text, chr(10)), 1) AS i
-          FROM documents WHERE text IS NOT NULL),
-        k AS (
-          SELECT doc_id, line, i,
-                 CASE WHEN length(line) >= 10
-                      THEN min(i) OVER (PARTITION BY doc_id, line)
-                      ELSE i END AS firsti,
-                 count(*) OVER (PARTITION BY doc_id) AS n_lines
-          FROM l)
-        SELECT doc_id, count(*)::BIGINT AS n_kept,
-               (any_value(n_lines) - count(*))::BIGINT AS n_dropped,
-               coalesce(string_agg(line, chr(10) ORDER BY i), '') AS text_clean
-        FROM k WHERE i = firsti GROUP BY doc_id
-      """.trim,
-      // quality gate -> FNV stratified sample -> row_number cap, stage for
-      // stage the same chain the engine composes
-      "curation_pipeline" -> s"""
-        WITH m AS (
-          SELECT doc_id, lang, source, length(text) AS n_chars,
-                 len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-                 length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS n_punct,
-                 length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits
-          FROM documents WHERE text IS NOT NULL),
-        gated AS (
-          SELECT doc_id, lang, source FROM m
-          WHERE n_tokens BETWEEN 5 AND 100000 AND n_punct * 4 <= n_chars
-                AND n_digits * 4 <= n_chars),
-        h AS (
-          SELECT doc_id, lang, source,
-            ${fnvU("doc_id::VARCHAR || 'cur'")} AS u
-          FROM gated),
-        samp AS (
-          SELECT doc_id, source FROM h
-          WHERE ${signedPmod("u", 1000000L)} <
-            CASE lang WHEN 'en' THEN 600000 WHEN 'zh' THEN 400000 ELSE 800000 END)
-        SELECT source, doc_id FROM (
-          SELECT source, doc_id,
-                 row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-          FROM samp)
-        WHERE rn <= 8
-      """.trim,
-      // per-dimension mean with the engine's float quantization replayed
-      // (::REAL) so rounding is bit-identical across engines
-      "embed_label_centroids" -> """
-        SELECT label::BIGINT AS label, count(*)::BIGINT AS n, i::BIGINT AS dim,
-               round(((sum(embedding[i]::DOUBLE) / count(*))::REAL)::DOUBLE, 6) AS v
-        FROM embeddings, generate_series(1, 64) AS t(i)
-        WHERE embedding IS NOT NULL
-        GROUP BY label, i
-      """.trim,
-      "text_fingerprints" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), g0 AS (
-          SELECT doc_id,
-            CASE WHEN len(toks) >= 5
-              THEN list_transform(generate_series(1, len(toks) - 4),
-                   i -> array_to_string(list_slice(toks, i, i + 4), ' '))
-              ELSE [array_to_string(toks, ' ')] END AS raw
-          FROM t
-        ), g AS (
-          SELECT doc_id,
-            list_transform(
-              list_filter(generate_series(1, len(raw)), i -> list_position(raw, raw[i]) = i),
-              i -> raw[i]) AS grams
-          FROM g0
-        ), h AS (
-          SELECT doc_id,
-            list_transform(
-              list_transform(grams, gram -> list_reduce(
-                list_prepend(14695981039346656037::UBIGINT,
-                  list_transform(generate_series(1, length(gram)), i -> ascii(substr(gram, i, 1))::UBIGINT)),
-                (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)::HUGEINT),
-              fh -> (CASE WHEN fh >= 9223372036854775808::HUGEINT
-                          THEN fh - 18446744073709551616::HUGEINT ELSE fh END)::BIGINT) AS hs
-          FROM g
-        ), m AS (
-          SELECT doc_id,
-            CASE WHEN len(hs) >= 4
-              THEN list_transform(generate_series(1, len(hs) - 3), i -> list_min(list_slice(hs, i, i + 3)))
-              ELSE [list_min(hs)] END AS mins
-          FROM h
-        )
-        SELECT doc_id, len(list_distinct(mins))::BIGINT AS n_grams FROM m
-      """.trim,
-      // langid: per-language marker-word scores, argmax with the engine's
-      // defined tie-break (score DESC, then language code DESC — Spark
-      // struct-greatest semantics); zero hits -> 'und'
-      // char-n-gram langid replayed exactly: the snippet array, every
-      // profile gram, and the replace()-delta counting are generated from
-      // the SAME Scala tables the Spark kernel uses; tie-break matches
-      // greatest(struct(score, lang)) = (score DESC, lang DESC)
-      "text_langid_ngram" -> {
-        val snippetArr = TextAnalysis.LangSnippets.map { case (_, s) => s"'$s'" }
-          .mkString("[", ", ", "]")
-        val scoreSelects = TextAnalysis.LangProfiles.map { case (lang, gs) =>
-          val terms = gs.map { g =>
-            s"((length(t2) - length(replace(t2, '$g', ''))) / ${g.length})::INT"
-          }.mkString(" + ")
-          s"SELECT doc_id, '$lang' AS lang, ($terms) AS s FROM t"
-        }.mkString("\n          UNION ALL ")
-        s"""
-        WITH t AS (
-          SELECT doc_id,
-                 $snippetArr[(doc_id % 5)::INT + 1] || ' ' || substr(lower(text), 1, 60) AS t2
-          FROM documents WHERE text IS NOT NULL
-        ), scores AS (
-          $scoreSelects
-        ), best AS (
-          SELECT doc_id, s, lang,
-                 row_number() OVER (PARTITION BY doc_id ORDER BY s DESC, lang DESC) AS rn
-          FROM scores)
-        SELECT CASE WHEN s = 0 THEN 'und' ELSE lang END AS lang, count(*)::BIGINT AS cnt
-        FROM best WHERE rn = 1 GROUP BY 1
-        """.trim
-      },
-      "text_langid_dist" -> {
-        val scoreSelects = TextAnalysis.LangMarkers.map { case (lang, words) =>
-          val arr = words.map(w => s"'$w'").mkString("[", ", ", "]")
-          s"SELECT doc_id, '$lang' AS lang, " +
-            s"len(list_filter(toks, t -> list_contains($arr, t))) AS s FROM t"
-        }.mkString("\n          UNION ALL ")
-        s"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents
-        ), scores AS (
-          $scoreSelects
-        ), best AS (
-          SELECT doc_id, s, lang,
-                 row_number() OVER (PARTITION BY doc_id ORDER BY s DESC, lang DESC) AS rn
-          FROM scores)
-        SELECT CASE WHEN s = 0 THEN 'und' ELSE lang END AS lang_pred, count(*)::BIGINT AS n
-        FROM best WHERE rn = 1 GROUP BY 1
-        """.trim
-      },
-      "text_topk_terms" -> """
-        WITH toks AS (
-          SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                 t -> length(t) > 0)) AS term
-          FROM documents)
-        SELECT term, count(*)::BIGINT AS n FROM toks
-        GROUP BY term ORDER BY n DESC, term LIMIT 100
-      """.trim,
-      "text_repetition" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), g AS (
-          SELECT doc_id,
-            CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END AS grams
-          FROM t)
-        SELECT doc_id, len(grams)::BIGINT AS n_grams,
-               len(list_distinct(grams))::BIGINT AS n_distinct
-        FROM g
-      """.trim,
-      "text_contamination" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), bg AS (
-          SELECT DISTINCT unnest(sh) AS g FROM shq WHERE doc_id % 50 = 0
-        ), dg AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq WHERE doc_id % 50 <> 0
-        )
-        SELECT doc_id, count(*)::BIGINT AS n_overlap
-        FROM dg JOIN bg USING (g)
-        GROUP BY doc_id HAVING count(*) >= 5
-      """.trim,
-      "marc_json_dump" -> {
-        // oracle literal = the reference's actual model_dump json on this record
-        val dump = graft.expr.MarcJson.serialize(Fixtures.validDoc.spans)
-        s"SELECT 'on1381158740' AS doc_id, '${dump.replace("'", "''")}' AS dump"
-      },
-      // multimodal oracles: closed-form recomputation of the decoded
-      // features (generative formulas documented in ops/Multimodal.scala)
-      "mm_audio_features" -> """
-        WITH d AS (SELECT doc_id, 800 + (doc_id % 7) * 160 AS n
-                   FROM documents WHERE doc_id % 3 = 1),
-             s AS (SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i FROM d)
-        SELECT doc_id, 8000::BIGINT AS sample_rate, n::BIGINT AS n_samples,
-               (n // 8)::BIGINT AS duration_ms,
-               sum(abs((doc_id * 1000003 + i * 7919) % 65536 - 32768))::BIGINT AS abs_sum,
-               max(abs((doc_id * 1000003 + i * 7919) % 65536 - 32768))::BIGINT AS peak
-        FROM s GROUP BY doc_id, n
-      """.trim,
-      "mm_image_features" -> """
-        WITH d AS (SELECT doc_id, 13 + (doc_id % 5) AS w, 7 + ((doc_id // 3) % 4) AS h
-                   FROM documents WHERE doc_id % 3 = 0),
-             px AS (SELECT doc_id, w, h, unnest(generate_series(0, w * h - 1)) AS p FROM d),
-             l AS (SELECT doc_id, w, h,
-                     (299 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31) % 256)
-                    + 587 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31 + 7) % 256)
-                    + 114 * ((doc_id * 9176 + (p // w) * 131 + (p % w) * 31 + 14) % 256)) // 1000 AS lum
-                   FROM px)
-        SELECT doc_id, w::BIGINT AS width, h::BIGINT AS height, sum(lum)::BIGINT AS lum_sum
-        FROM l GROUP BY doc_id, w, h
-      """.trim,
-      "mm_frame_sample" -> """
-        WITH d AS (SELECT doc_id, 3 + (doc_id % 4) AS nf
-                   FROM documents WHERE doc_id % 3 = 2),
-             f AS (SELECT doc_id, unnest(generate_series(0, nf - 1, 2)) AS fi FROM d),
-             px AS (SELECT doc_id, fi, unnest(generate_series(0, 47)) AS p FROM f),
-             l AS (SELECT doc_id, fi,
-                     (299 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31) % 256)
-                    + 587 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31 + 7) % 256)
-                    + 114 * (((doc_id * 131071 + fi * 8191) * 9176 + (p // 8) * 131 + (p % 8) * 31 + 14) % 256)) // 1000 AS lum
-                   FROM px)
-        SELECT doc_id, fi::BIGINT AS frame_idx, (fi * 500)::BIGINT AS ts_ms,
-               sum(lum)::BIGINT AS lum_sum
-        FROM l GROUP BY doc_id, fi
-      """.trim,
-      "events_hourly" -> """
-        SELECT date_trunc('hour', ts) AS hour_ts, event_type, count(*)::BIGINT AS n
-        FROM events GROUP BY 1, 2
-      """.trim)
-  }
+    }, """
+      SELECT date_trunc('hour', ts) AS hour_ts, event_type, count(*)::BIGINT AS n
+      FROM events GROUP BY 1, 2
+    """))
 }

@@ -1,24 +1,26 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each SparkEntry.registry query's result →
+  * parquet, plus the same queries' oracle SQL in oracle_sql.json, for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (dev loop only;
     // the driver always calls with exactly (sfDir, outDir))
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
+    if (args.length < 2 || args.length > 3) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query,query,...]")
+      sys.exit(2)
     }
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.lift(2).map(_.split(",").toSet)
+    val selected = SparkEntry.registry.filter(q => only.forall(_.contains(q.name)))
     val spark = Session.create("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { query =>
+      try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${query.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -33,8 +35,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(query => s"${q(query.name)}: ${q(query.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -6,7 +6,8 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [query ...]
 Runs each oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 parquet tables in <sfDir> (registered by table name), loads the Spark result
 parquet from <verifyOutDir>/<query>/, sorts columns by name and rows by all
-columns, and compares values.
+columns, and compares values. A named query with no oracle in
+oracle_sql.json is reported as NO ORACLE; any failure exits 1.
 """
 import json
 import math
@@ -46,9 +47,12 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     bad = 0
-    for name, sql in sorted(oracles.items()):
-        if only and name not in only:
+    for name in sorted(only or oracles):
+        if name not in oracles:
+            print(f"{name}: NO ORACLE")
+            bad += 1
             continue
+        sql = oracles[name]
         try:
             spark = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
