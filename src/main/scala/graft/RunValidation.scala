@@ -11,14 +11,29 @@ import graft.checks.ValidationJob
   * doubles as the kill-simulation hook).
   */
 object RunValidation {
+  val Usage = "usage: RunValidation <inputDir> <outDir> <runId> [batches] [maxBatches]"
+
+  final case class Args(inputDir: String, outDir: String, runId: String,
+      batches: Int, maxBatches: Int)
+
+  /** None on a wrong argument count or a non-integer batch argument. */
+  def parse(args: Array[String]): Option[Args] = args match {
+    case Array(inputDir, outDir, runId, rest @ _*) if rest.size <= 2 =>
+      val nums = rest.flatMap(_.toIntOption)
+      if (nums.size < rest.size) None
+      else Some(Args(inputDir, outDir, runId, nums.lift(0).getOrElse(8),
+        nums.lift(1).getOrElse(Int.MaxValue)))
+    case _ => None
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: RunValidation <inputDir> <outDir> <runId> [batches] [maxBatches]")
-    val Array(inputDir, outDir, runId) = args.take(3)
-    val batches = if (args.length > 3) args(3).toInt else 8
-    val maxBatches = if (args.length > 4) args(4).toInt else Int.MaxValue
+    val a = parse(args).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val spark = Session.create("graft-validate")
-    val s = ValidationJob.run(spark, inputDir, outDir, runId,
-      batches = batches, maxBatches = maxBatches)
+    val s = ValidationJob.run(spark, a.inputDir, a.outDir, a.runId,
+      batches = a.batches, maxBatches = a.maxBatches)
     println(s"""{"run_id":"${s.runId}","snapshot_id":"${s.snapshotId}",""" +
       s""""batches_run":${s.batchesRun},"batches_skipped":${s.batchesSkipped},""" +
       s""""rows":${s.rows},"violations":${s.violations}}""")

@@ -1,8 +1,11 @@
 package graft.checks
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
+import graft.agg.{Kmv, Tally}
 import graft.io.{Ledger, ParquetSnapshotIO, Snapshot}
 import graft.rules.RuleSet
 
@@ -12,13 +15,19 @@ import graft.rules.RuleSet
   *
   * Unit of recovery = one batch of input files (batch count configurable;
   * one file per batch = finest replay granularity). Each batch is atomic:
-  * verdicts + violations are written (append) before its ledger rows, so a
-  * ledger row certifies durable output. Within a batch, all files process
-  * in ONE distributed job — full cluster parallelism, no per-file loop.
+  * verdicts + violations are written before its ledger rows, so a ledger
+  * row certifies durable output. Within a batch, all files process in one
+  * distributed pass — full cluster parallelism, no per-file loop.
   *
-  * Per-file metrics come from a groupBy on input_file_name() over the
-  * batch's written verdict output — the corpus is scanned exactly once per
-  * batch; only the (tiny) verdict table is re-read for the breakdown.
+  * One scan-and-validate pass per batch, three Spark jobs:
+  *  1. the verdict write scans and validates the batch once, caching the
+  *     narrow `(doc_id, passed, violations, src_file)` rows; the batch's
+  *     distinct-doc_id sketch and its per-file (rows, violations, failed)
+  *     tallies ride the same pass as observed metrics;
+  *  2. the violations write explodes the cached failing rows — no second
+  *     parquet scan and no second run of the validate kernel;
+  *  3. the ledger append.
+  * The docs schema is inferred once per [[run]], from the pinned snapshot.
   */
 object ValidationJob {
 
@@ -39,74 +48,70 @@ object ValidationJob {
     * orphan directories. Resume therefore requires the same `batches` value
     * as the original run (it is part of the recovery-unit definition).
     *
-    * @param batches    number of file batches (recovery units)
-    * @param maxBatches stop after this many batches (test hook simulating a
-    *                   kill between recovery units)
+    * @param batches    number of file batches (recovery units), >= 1
+    * @param maxBatches stop after this many batches, >= 0 (test hook
+    *                   simulating a kill between recovery units)
     */
   def run(spark: SparkSession, inputDir: String, outDir: String, runId: String,
       rules: RuleSet = RuleSet.default, batches: Int = 8,
       maxBatches: Int = Int.MaxValue): RunSummary = {
+    require(batches >= 1, s"batches must be >= 1, got $batches")
+    require(maxBatches >= 0, s"maxBatches must be >= 0, got $maxBatches")
     val snap: Snapshot = ParquetSnapshotIO.pinSnapshot(spark, inputDir, s"$outDir/manifests")
     val done = Ledger.completedFiles(spark, outDir, runId, snap.snapshotId)
     // deterministic batching over the FULL snapshot, then skip whole
     // finished batches — never regroup the remainder (see scaladoc)
-    val groups = partitionBatches(snap.files.sorted, batches)
+    val groups = snap.files.sorted
+      .grouped(math.ceil(snap.files.size.toDouble / batches).toInt).toSeq
     val todoGroups = groups.filterNot(_.forall(done))
+    // inferred once, and only if a batch runs
+    lazy val schema = ParquetSnapshotIO.schema(spark, snap)
 
     var rows = 0L; var viols = 0L; var ran = 0
     todoGroups.take(maxBatches).foreach { files =>
-      val r = runBatch(spark, snap, files, outDir, runId, rules)
+      val r = runBatch(spark, snap, schema, files, outDir, runId, rules)
       rows += r.rows; viols += r.violations; ran += 1
     }
     RunSummary(runId, snap.snapshotId, ran,
       batchesSkipped = groups.size - todoGroups.size, rows, viols)
   }
 
-  private def partitionBatches(files: Seq[String], batches: Int): Seq[Seq[String]] =
-    if (files.isEmpty) Nil
-    else files.grouped(math.max(1, math.ceil(files.size.toDouble / batches).toInt)).toSeq
-
-  private def runBatch(spark: SparkSession, snap: Snapshot, files: Seq[String],
-      outDir: String, runId: String, rules: RuleSet): BatchResult = {
+  private def runBatch(spark: SparkSession, snap: Snapshot, schema: StructType,
+      files: Seq[String], outDir: String, runId: String, rules: RuleSet): BatchResult = {
     val t0 = System.nanoTime()
     // batch key derives from the (snapshot-sorted) file set: stable across
     // attempts, so a replayed batch overwrites its own prior partial output
     val batchId = java.lang.Integer.toUnsignedString(
       scala.util.hashing.MurmurHash3.orderedHash(files), 16)
-    val docs = ParquetSnapshotIO.readSnapshot(spark, snap, files)
-    val validated = RowValidator.withViolations(docs, rules)
-      .withColumn("src_file", input_file_name())
+    val validated = RowValidator
+      .withViolations(ParquetSnapshotIO.readSnapshot(spark, snap, files, Some(schema)), rules)
+      .select(col("doc_id"), col("passed"), col("violations"),
+        input_file_name().as("src_file"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // one distributed pass: write per-doc verdicts (with per-file lineage);
-    // violations expand only for failing docs
     // Overwrite (not Append): a replayed batch must clobber a crashed
     // attempt's partial files in this deterministic directory.
-    // The batch's distinct-doc_id KMV sketch rides the SAME pass as an
-    // observed metric — no second scan of the corpus — and lands on the
-    // batch's ledger rows for cross-run merging.
-    val obs = org.apache.spark.sql.Observation()
-    val verdicts = validated
-      .observe(obs, graft.agg.Kmv.sketch(col("doc_id"), Ledger.SketchK)
-        .as("docid_sketch"))
-      .select(col("doc_id"), col("passed"),
-        size(col("violations")).as("n_violations"), col("src_file"))
-    verdicts.write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
+    val obs = Observation()
+    val perFile = try {
+      validated
+        .observe(obs,
+          Kmv.sketch(col("doc_id"), Ledger.SketchK).as("docid_sketch"),
+          Tally.byKey(col("src_file"), size(col("violations")), not(col("passed")))
+            .as("per_file"))
+        .select(col("doc_id"), col("passed"),
+          size(col("violations")).as("n_violations"), col("src_file"))
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
+      // reads the cached rows: the where cannot re-run the kernel
+      validated.where(not(col("passed")))
+        .select(col("doc_id"), col("src_file"), explode(col("violations")).as("v"))
+        .select(col("doc_id"), col("src_file"), col("v.*"))
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
+      obs.get("per_file").asInstanceOf[scala.collection.Seq[Row]]
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    } finally { validated.unpersist(); () }
     val batchSketch = obs.get("docid_sketch").asInstanceOf[Array[Byte]]
-
-    val violations = validated.where(not(col("passed")))
-      .select(col("doc_id"), col("src_file"), explode(col("violations")).as("v"))
-      .select(col("doc_id"), col("src_file"), col("v.*"))
-    violations.write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
-
-    // per-file metrics from the tiny verdict output (not the corpus)
-    val perFile = spark.read.parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
-      .groupBy(col("src_file"))
-      .agg(count(lit(1)).as("rows"), sum(col("n_violations")).as("viols"),
-        count(when(not(col("passed")), 1)).as("failed"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val elapsed = (System.nanoTime() - t0) / 1000000L
 
     // ledger rows LAST: their presence certifies the batch's durable output.
@@ -120,8 +125,7 @@ object ValidationJob {
       Ledger.Row(runId, snap.snapshotId, batchId, f, n, v, d, elapsed, batchSketch)
     }
     Ledger.append(spark, outDir, ledgerRows)
-    val rows = perFile.map(_._2).sum
-    val viols = perFile.map(_._3).sum
-    BatchResult(batchId, files, rows, viols, perFile.map(_._4).sum, elapsed)
+    BatchResult(batchId, files, perFile.map(_._2).sum, perFile.map(_._3).sum,
+      perFile.map(_._4).sum, elapsed)
   }
 }

@@ -72,12 +72,15 @@ object Ledger {
     else rows.count()
   }
 
-  /** Files already fully processed for (run_id, snapshot_id). */
+  /** Files already fully processed for (run_id, snapshot_id). A file's
+    * rows are few (one per completed attempt), so `toSet` dedupes on the
+    * driver; a `distinct` would cost an exchange and an extra job.
+    */
   def completedFiles(spark: SparkSession, outDir: String, runId: String,
       snapshotId: String): Set[String] =
     read(spark, outDir)
       .where(col("run_id") === runId && col("snapshot_id") === snapshotId)
-      .select("file").distinct()
+      .select("file")
       .collect().map(_.getString(0)).toSet
 
   /** Corpus-level distinct-doc_id sketch: the union of every persisted

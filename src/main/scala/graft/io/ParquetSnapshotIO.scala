@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** An immutable view of a table: id = 64-bit hash of the sorted file list. */
 final case class Snapshot(snapshotId: String, inputDir: String, files: Vector[String])
@@ -43,11 +44,21 @@ object ParquetSnapshotIO {
     snap
   }
 
-  /** Read a subset of the snapshot's files (resume path: only unfinished ones). */
+  /** The snapshot's schema, from its first file's footer (without
+    * `mergeSchema`, Spark infers a multi-file read's schema from one footer
+    * too). Inference is a Spark job, so a reader of many subsets infers once
+    * and passes the result to [[readSnapshot]].
+    */
+  def schema(spark: SparkSession, snapshot: Snapshot): StructType =
+    spark.read.parquet(snapshot.files.head).schema
+
+  /** Read a subset of the snapshot's files (resume path: only unfinished
+    * ones), inferring the schema from them unless one is given.
+    */
   def readSnapshot(spark: SparkSession, snapshot: Snapshot,
-      files: Seq[String]): DataFrame = {
+      files: Seq[String], schema: Option[StructType] = None): DataFrame = {
     require(files.forall(snapshot.files.contains),
       "attempted to read files outside the pinned snapshot")
-    spark.read.parquet(files: _*)
+    schema.fold(spark.read)(spark.read.schema).parquet(files: _*)
   }
 }

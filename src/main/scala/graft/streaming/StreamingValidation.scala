@@ -22,13 +22,6 @@ object StreamingValidation {
   def verdictStream(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
     RowValidator.verdicts(docs, rules)
 
-  /** Violation rows on a streaming docs frame. */
-  def violationStream(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    RowValidator.withViolations(docs, rules)
-      .where(not(col("passed")))
-      .select(col("doc_id"), explode(col("violations")).as("v"))
-      .select(col("doc_id"), col("v.*"))
-
   /** Windowed violation-rate over an event-time column: watermarked tumbling
     * windows, late data dropped past the watermark (stateful aggregation).
     */

@@ -3,6 +3,8 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Column <-> catalyst Expression bridge. Spark 4.x made this interop
   * package-private (`org.apache.spark.sql.classic.ExpressionUtils`), so the
@@ -36,15 +38,15 @@ object Bridge {
     * AQE-OFF (round-5 verdict: AQE re-plans exchanges, so an AQE-off pin
     * can miss exactly the divergence it exists to prevent).
     */
-  def finalPlanNodes(df: org.apache.spark.sql.Dataset[_])
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec        => q +: walk(q.plan)
-      case other                    => other +: other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan)
+  def finalPlanNodes(df: org.apache.spark.sql.Dataset[_]): Seq[SparkPlan] =
+    finalPlanNodes(df.queryExecution.executedPlan)
+
+  /** The same walk from an executed plan, e.g. the `QueryExecution` a
+    * `QueryExecutionListener` receives after the query ran.
+    */
+  def finalPlanNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => finalPlanNodes(a.executedPlan)
+    case q: QueryStageExec        => q +: finalPlanNodes(q.plan)
+    case other                    => other +: other.children.flatMap(c => finalPlanNodes(c))
   }
 }

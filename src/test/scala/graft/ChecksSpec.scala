@@ -92,6 +92,54 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(buf.set.size == 3 && buf.estimate == 3.0)
   }
 
+  test("Tally.byKey equals groupBy(count, sum, count_if) across partitions") {
+    import graft.agg.Tally
+    // 8 partitions: each builds a partial buffer, so serialize + merge run
+    val df = spark.range(0, 20000, 1, 8).select(
+      when($"id" % 97 === 0, lit(null)).otherwise(concat(lit("f"), $"id" % 13)).as("k"),
+      ($"id" % 5).cast("int").as("v"), ($"id" % 3 === 0).as("f"))
+    val tally = df.agg(Tally.byKey($"k", $"v", $"f").as("t"))
+      .select(explode($"t").as("e")).select("e.*").collect().toSeq
+    val grouped = df.groupBy($"k")
+      .agg(count(lit(1)).as("count"), sum($"v").as("sum"), count_if($"f").as("count_if"))
+      .collect().toSeq
+    assert(tally.size == 14 && tally.toSet == grouped.toSet)
+    // one element per key, sorted with the null key first
+    assert(tally.map(r => Option(r.getString(0))) == grouped.map(r => Option(r.getString(0))).sorted)
+    // wrong-typed inputs fail at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.agg(Tally.byKey($"v", $"v", $"f")).collect()
+    }
+  }
+
+  test("Tally buffer round-trips through serialize; empty input yields an empty array") {
+    import graft.agg.{Tally, TallyBuf}
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    def asMap(b: TallyBuf): Map[String, Seq[Long]] = {
+      val m = Map.newBuilder[String, Seq[Long]]
+      b.counts.forEach((k, v) => m += k -> v.toSeq)
+      m.result()
+    }
+    val buf = new TallyBuf
+    buf.add(fromString("a"), 3, flag = true)
+    buf.add(null, 1, flag = false)
+    buf.add(fromString("a"), 2, flag = false)
+    buf.add(fromString("b"), 0, flag = true)
+    val expected = Map("a" -> Seq(2L, 5L, 1L), (null: String) -> Seq(1L, 1L, 0L),
+      "b" -> Seq(1L, 0L, 1L))
+    assert(asMap(buf) == expected)
+    val back = TallyBuf.deserialize(buf.serialize)
+    assert(asMap(back) == expected)
+    // merging a copy doubles every counter
+    back.merge(TallyBuf.deserialize(buf.serialize))
+    assert(asMap(back) == expected.map { case (k, v) => k -> v.map(_ * 2) })
+    assert(TallyBuf.deserialize(new TallyBuf().serialize).counts.isEmpty)
+    val empty = spark.range(0, 0, 1, 4)
+      .select(lit("k").as("k"), lit(1).as("v"), lit(true).as("f"))
+      .agg(Tally.byKey($"k", $"v", $"f")).collect()
+    assert(empty.length == 1 && empty.head.getSeq[org.apache.spark.sql.Row](0).isEmpty)
+  }
+
   test("uniqueness finds duplicated keys and survives an adversarial hot key") {
     // one key with 100k rows across partitions + 10 normal dup keys + uniques
     val hot = spark.range(0, 100000, 1, 16).select(lit("HOT").as("k"))

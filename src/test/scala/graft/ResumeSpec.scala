@@ -158,6 +158,83 @@ class ResumeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(viols.count() == 20 * Synth.violationsPerClass.sum)
   }
 
+  test("each batch scans its docs once; ledger counts equal the verdicts grouped by file") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val in = tmp(); val out = tmp()
+    writeCorpus(s"$in/docs", 180, 6)
+    val docsDir = new org.apache.hadoop.fs.Path(s"$in/docs").toUri.getPath
+    // the scans the job's queries planned over the docs, a cached frame's
+    // scan included; a scan reused through the cache is one instance
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = Bridge.finalPlanNodes(p).flatMap {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans(qe.executedPlan)
+          .filter(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(docsDir)))
+          .foreach(s => seen.synchronized { seen.add(s) })
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val sum = try {
+      val s = ValidationJob.run(spark, s"$in/docs", out, "run1", batches = 3)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      s
+    } finally spark.listenerManager.unregister(listener)
+    assert(sum.batchesRun == 3 && seen.size == sum.batchesRun)
+    // no cached frame outlives its batch
+    assert(spark.sharedState.cacheManager.isEmpty)
+
+    def norm(f: String): String = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    val byFile = spark.read.parquet(s"$out/verdicts").groupBy(col("src_file"))
+      .agg(count(lit(1)), sum1("n_violations"), count_if(not(col("passed"))))
+      .collect().map(r => (norm(r.getString(0)), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val ledger = Ledger.read(spark, out)
+      .select("file", "rows_validated", "violations", "docs_failed")
+      .collect().map(r => (norm(r.getString(0)), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(ledger.length == 6 && ledger.toSet == byFile.toSet)
+  }
+
+  test("a batch that throws appends no ledger rows and leaves no cached frame") {
+    val in = tmp(); val out = tmp()
+    writeCorpus(s"$in/docs", 90, 3)
+    // the last batch's only file is not parquet: its verdict write fails
+    val last = new java.io.File(s"$in/docs").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).max
+    Files.write(java.nio.file.Paths.get(last), "not parquet".getBytes)
+    // drop its checksum so the failure is the parquet read, not a checksum
+    new java.io.File(new java.io.File(last).getParent,
+      s".${new java.io.File(last).getName}.crc").delete()
+    intercept[Exception](ValidationJob.run(spark, s"$in/docs", out, "run1", batches = 3))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(Ledger.read(spark, out).count() == 2)
+  }
+
+  test("bad batch arguments fail loudly") {
+    // a valid corpus: pinSnapshot's own IllegalArgumentException cannot fire
+    val in = tmp()
+    writeCorpus(s"$in/docs", 30, 1)
+    intercept[IllegalArgumentException](
+      ValidationJob.run(spark, s"$in/docs", tmp(), "run1", batches = 0))
+    intercept[IllegalArgumentException](
+      ValidationJob.run(spark, s"$in/docs", tmp(), "run1", maxBatches = -1))
+    // RunValidation prints its usage line (and exits 2) when parse fails
+    assert(RunValidation.parse(Array("in", "out", "run", "4", "2")) ==
+      Some(RunValidation.Args("in", "out", "run", 4, 2)))
+    assert(RunValidation.parse(Array("in", "out", "run")) ==
+      Some(RunValidation.Args("in", "out", "run", 8, Int.MaxValue)))
+    assert(RunValidation.parse(Array("in", "out", "run", "four")).isEmpty)
+    assert(RunValidation.parse(Array("in", "out", "run", "4", "x")).isEmpty)
+    assert(RunValidation.parse(Array("in", "out")).isEmpty)
+  }
+
   test("a second run_id on the same output dir does not reuse the first run's ledger") {
     val in = tmp(); val out = tmp()
     writeCorpus(s"$in/docs", 90, 3)
